@@ -4,9 +4,9 @@ import java.nio.file.{Files, Paths}
 
 /** Optimization-round evidence tool: writes `.explain("formatted")` for the
   * named queries to `<outDir>/<query>_<tag>.txt` so before/after plan shapes
-  * are committed and diffable (plans/r13/). Unlike [[Explain]] this captures
-  * the FULL formatted plan (Exchange count, join strategy, PushedFilters,
-  * ReadSchema, codegen spans), not a 4 KB toString cut.
+  * are committed and diffable (plans/r13/). It captures the FULL formatted
+  * plan (Exchange count, join strategy, PushedFilters, ReadSchema, codegen
+  * spans).
   *
   * `runMain graft.PlanDump <outDir> <tag> [query...]`
   * env: SPARK_GRAFT_SF_DIR (default sf0.01), SPARK_GRAFT_CPUS (default 4).

@@ -138,10 +138,9 @@ object ScaleGen {
     println(s"[scalegen] wrote ${factor}x of $base to $out: " +
       s"docs=${nDocs * factor} vecs=${nVec * factor} " +
       s"events=${events.count() * factor}")
-    // the out dir may shadow a dir this session already served from the
-    // (session, dir)-keyed checkpoint caches — drop them so nothing
-    // serves stale pre-regeneration data (r8 advisor finding)
-    signals.RuleCorpus.invalidateShared()
+    // release the shared stages' checkpoint blocks of the dirs this
+    // session served before regenerating them
+    SharedStage.invalidateAll()
     spark.stop()
   }
 }

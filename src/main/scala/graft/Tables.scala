@@ -69,19 +69,14 @@ object Tables {
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** Content stamp of a corpus dir's parquet entries (names, sizes,
-    * mtimes). The SHARED staleness key: both the RuleCorpus checkpoint
-    * caches and [[materialized]] embed it, so an in-session rewrite of a
-    * served dir changes every cache key at once — no layer can serve data
-    * derived from the old files (the r10 review found the fingerprint sat
-    * only ABOVE this cache, which would have rebuilt a "fresh" corpus
-    * from stale bucketed candles).
-    *
-    * r11 (ADVICE): the walk is now FULLY recursive (a rewrite inside a
-    * nested `dt=`-partition subdirectory changes the stamp) and mtimes
-    * read at the filesystem's native resolution via
-    * `Files.getLastModifiedTime` (nanos where the FS provides them —
-    * `File.lastModified()`'s whole-millisecond truncation left a
-    * same-length same-milli rewrite invisible to every cache layer).
+    * mtimes). The SHARED staleness key: every [[SharedStage]] key and
+    * [[materialized]] embed it, so an in-session rewrite of a served dir
+    * changes every cache key at once — no layer can serve data derived
+    * from the old files. The walk is fully recursive (a rewrite inside a
+    * nested `dt=`-partition subdirectory changes the stamp) and reads
+    * mtimes at the filesystem's native resolution
+    * (`Files.getLastModifiedTime`), so a same-length same-millisecond
+    * rewrite still changes it.
     */
   def dirStamp(dir: String): Long = {
     def mtime(f: java.io.File): Long =
@@ -101,51 +96,22 @@ object Tables {
     entries.foldLeft(17L)((acc, e) => acc * 31 + walk(e))
   }
 
-  /** True when this session disables cross-QUERY shared-state memoization
-    * (`spark.graft.sharedMemo=off`). The r13 optimization round memoized
-    * seven expensive shared builds (k-means trainer, BPE merges, curation
-    * manifest, 1h fired corpus, kNN graph, bigram LM, CC labels) per
-    * (session, corpus@stamp); the r13 judge's finding: with min-of-N
-    * per-query bench reporting in ONE long-lived session, those entries'
-    * reported numbers became cache reads and the build cost appeared in no
-    * committed number. [[graft.Bench]] sets this conf for its per-query
-    * timing so every entry's number charges the operator's real cost
-    * (including its shared builds), and reports a separate memo-ON
-    * "serving total" for the fan-out architecture the memos implement.
-    * Only the cache lookup/store is skipped — construction, checkpoint
-    * discipline and results are bit-identical (MemoSpec pins it).
+  /** True when this session runs with `spark.graft.sharedMemo=off`: every
+    * [[SharedStage]] builds without consulting its cache. [[graft.Bench]]
+    * times its per-entry numbers this way so each entry pays for its own
+    * shared builds, and reports the memo-on fan-out separately. Results
+    * are identical in both positions (MemoSpec).
     */
   private[graft] def sharedMemoOff(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.sharedMemo").exists(_.equalsIgnoreCase("off"))
 
-  /** Structural key for (session, dir-content, variant)-scoped memo caches
-    * — the string-concatenation keys (`"$dir@$stamp"`) the r13 caches used
-    * could in principle collide with a sibling corpus whose PATH contains
-    * `@<digits>` (the r11 matCache lesson: structural fields, not string
-    * prefixes). `sub` carries a per-cache variant axis (e.g. the roll-up
-    * cadence); 0 where unused.
+  /** A [[SharedStage]] entry's key: session, corpus dir, the dir's
+    * [[dirStamp]] and a per-stage variant axis `sub` (e.g. the roll-up
+    * cadence; 0 where unused). Structural fields, so no dir path can
+    * collide with another dir's key.
     */
   private[graft] final case class StampKey(s: SparkSession, dir: String,
     stamp: Long, sub: Long)
-
-  /** Memo-lookup wrapper shared by every (session, corpus@stamp)-keyed
-    * cache: honors [[sharedMemoOff]] (build without touching the cache),
-    * and evicts superseded-stamp entries for the same (session, dir) on
-    * access — the trainedCache removeIf pattern the r13 advisor asked to
-    * apply to all of them (in-session corpus rewrites otherwise accumulate
-    * stale entries whose barrier'd frames pin checkpoint blocks).
-    */
-  private[graft] def stampKeyed[V](
-      cache: java.util.concurrent.ConcurrentHashMap[StampKey, V],
-      s: SparkSession, dir: String, sub: Long = 0L)(build: => V): V = {
-    if (sharedMemoOff(s)) build
-    else {
-      val key = StampKey(s, dir, dirStamp(dir), sub)
-      cache.keySet.removeIf(k => (k.s eq s) && k.dir == dir &&
-        k.stamp != key.stamp)
-      cache.computeIfAbsent(key, _ => build)
-    }
-  }
 
   private def materialized(spark: SparkSession, dir: String, name: String,
       sortCols: Seq[String], buckets: Int = 8)(derive: => DataFrame): DataFrame = {
@@ -375,10 +341,9 @@ object Tables {
   }
 
   /** True while a [[withCandleFrame]]/[[withMetricsFrame]] override is
-    * active on this thread — (session, dir)-keyed memoizers must NOT
-    * cache frames built under an override (a priority-cut roll-up cached
-    * under the uncut key, or vice versa, would silently serve the wrong
-    * fact to the next caller).
+    * active on this thread. [[SharedStage]] then builds without its cache:
+    * a priority-cut frame cached under the uncut key, or vice versa, would
+    * serve the wrong fact to the next caller.
     */
   private[graft] def factOverrideActive: Boolean =
     candleOverride.get != null || metricsOverride.get != null

@@ -63,7 +63,9 @@ object EwmaWindow {
     call_function("ewma", col, lit(alpha))
   }
 
-  /** Register `ewma(x, alpha)` for SQL texts on this session. */
+  /** Register `ewma(x, alpha)` for SQL texts on this session (once: a
+    * session that already has it keeps its registration).
+    */
   def register(spark: SparkSession): Unit =
     GraftBridge.registerFunction(spark, "ewma",
       exprs => Ewma(exprs.head, exprs(1)))

@@ -284,22 +284,11 @@ object Cycle {
     import scala.concurrent.duration.Duration
     require(branches.nonEmpty,
       "runBranches needs at least one branch plan (empty indicator pack?)")
-    // Optimization-r13 experiment dial: checkpoint small LAZY unions of
-    // `branchGroup` branches instead of one job per branch — fewer eager
-    // jobs, each still a bounded plan (the measured superlinear blow-up
-    // was ONE union of ~287 window plans, not unions of a handful).
-    // Default 1 = the proven per-branch shape.
-    val group = branches.headOption.map(_.sparkSession)
-      .flatMap(_.conf.getOption("spark.graft.cycle.branchGroup"))
-      .flatMap(_.toIntOption.filter(_ > 0)).getOrElse(1)
-    val units =
-      if (group <= 1) branches
-      else branches.grouped(group).map(_.reduce(_.unionByName(_))).toSeq
     val pool = Executors.newFixedThreadPool(branchPool(branches))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val done = Await.result(
-        Future.traverse(units)(b => Future(b.localCheckpoint())),
+        Future.traverse(branches)(b => Future(b.localCheckpoint())),
         Duration.Inf)
       done.reduce(_.unionByName(_))
     } finally pool.shutdown()

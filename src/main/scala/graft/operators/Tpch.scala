@@ -149,8 +149,7 @@ object Tpch {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("l_partkey"))
     offers.withColumn("best_price", min(col("unit_price")).over(w))
       .filter(col("unit_price") === col("best_price"))
-      .join(broadcast(Tables.part(s, dir).filter(col("p_size") <= 10)),
-        col("l_partkey") === col("p_partkey"))
+      .join(broadcast(smallParts), col("l_partkey") === col("p_partkey"))
       .join(broadcast(Tables.supplier(s, dir)),
         col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(Tables.nation(s, dir)),

@@ -462,21 +462,16 @@ object Curation {
     * composition adds only doc_id-keyed joins, which co-partition after
     * the first shuffle.
     */
-  /** The manifest frame memoized per (session, corpus@stamp) behind a
-    * lazy barrier — the sharedRolled/k-means/BPE-trainer discipline
-    * (optimization r13): THREE registry entries consume the identical
-    * manifest (p05 itself, p09's kept set, p11's kept set), and each
-    * previously re-derived the full six-flag composition (near-dup CC,
-    * two LM terciles, decontamination) per query. A real run emits the
-    * manifest once and every downstream stage reads it — exactly the
-    * relation this memo holds. Stamp-keyed, so an in-session corpus
-    * rewrite rebuilds it.
+  /** The manifest frame as a [[graft.SharedStage]] behind a lazy
+    * barrier: THREE registry entries consume the identical manifest (p05
+    * itself, p09's kept set, p11's kept set), built from the full
+    * six-flag composition (near-dup CC, two LM terciles,
+    * decontamination). A real run emits the manifest once and every
+    * downstream stage reads it.
     */
-  private val manifestCache = new java.util.concurrent.ConcurrentHashMap[
-    Tables.StampKey, DataFrame]()
+  private val manifestStage = graft.SharedStage[DataFrame]("Curation.manifest")
   private val curationManifest: Q = (s, dir) =>
-    Tables.stampKeyed(manifestCache, s, dir)(
-      Tables.barrier(manifestBuild(s, dir)))
+    manifestStage(s, dir)(Tables.barrier(manifestBuild(s, dir)))
 
   private def manifestBuild(s: SparkSession, dir: String): DataFrame = {
     val corpus = Tables.documents(s, dir).filter(col("doc_id") % 97 =!= 0)

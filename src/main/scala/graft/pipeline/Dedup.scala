@@ -503,20 +503,16 @@ object Dedup {
     * graph, only a scalar convergence count per round). Oracle: DuckDB
     * recursive CTE computing min reachable id.
     */
-  /** [[componentsBuild]] memoized per (session, corpus@stamp) — the
-    * corpusFiredShared discipline: the CC label table is consumed by
-    * FOUR registry paths in one session (d05 itself, d06's survivor
-    * rank, and p05/p09's near-dup manifest flag since r13), and the
+  /** [[componentsBuild]] as a [[graft.SharedStage]]: the CC label table
+    * is consumed by FOUR registry paths in one session (d05 itself, d06's
+    * survivor rank, and p05/p09's near-dup manifest flag), and the
     * iterative propagation is the dedup family's most expensive stage.
     * Evaluate it once, checkpoint the label table (component-scale, not
-    * corpus-scale), fan it out; the stamp in the key means a rewritten
-    * corpus re-derives instead of serving stale labels.
+    * corpus-scale), fan it out.
     */
-  private val sharedComponents =
-    new java.util.concurrent.ConcurrentHashMap[Tables.StampKey, DataFrame]()
+  private val componentsStage = graft.SharedStage[DataFrame]("Dedup.components")
   private val components: Q = (s, dir) =>
-    Tables.stampKeyed(sharedComponents, s, dir)(
-      componentsBuild(s, dir).localCheckpoint())
+    componentsStage(s, dir)(componentsBuild(s, dir).localCheckpoint())
 
   private def componentsBuild(s: SparkSession, dir: String): DataFrame =
     minLabelPropagation(ngramJaccard(s, dir).select(col("a"), col("b")))

@@ -229,17 +229,15 @@ object Similarity {
   /** s07's full kNN-graph frame — shared by the standalone entry and
     * s13's cluster discovery (the temperatureSelect discipline).
     */
-  /** The kNN-graph frame memoized per (session, corpus@stamp) behind a
-    * lazy barrier (optimization r13, the trained-state discipline): THREE
-    * registry entries build the identical graph (s07 itself, s13's
-    * components, s14's rank) — a pipeline builds this artifact once and
-    * reuses it, which is the operator's own scaladoc contract.
+  /** The kNN-graph frame as a [[graft.SharedStage]] behind a lazy
+    * barrier: THREE registry entries build the identical graph (s07
+    * itself, s13's components, s14's rank) — a pipeline builds this
+    * artifact once and reuses it, which is the operator's own scaladoc
+    * contract.
     */
-  private val knnGraphCache = new java.util.concurrent.ConcurrentHashMap[
-    Tables.StampKey, DataFrame]()
+  private val knnGraphStage = graft.SharedStage[DataFrame]("Similarity.knnGraph")
   private def knnGraphFrame(s: SparkSession, dir: String): DataFrame =
-    Tables.stampKeyed(knnGraphCache, s, dir)(
-      Tables.barrier(knnGraphBuild(s, dir)))
+    knnGraphStage(s, dir)(Tables.barrier(knnGraphBuild(s, dir)))
 
   private def knnGraphBuild(s: SparkSession, dir: String): DataFrame = {
     val (bk, p) = bucketed(s, dir)
@@ -1032,33 +1030,21 @@ object Similarity {
     * can route the final assignment through the hierarchical probe
     * instead of the exact K-wide argmin.
     */
-  /** Trained k-means state memoized per (session, corpus@stamp) — the
-    * sharedRolled/sharedComponents discipline (optimization r13, guide
-    * §1.2 step 1: don't compute things twice). SEVEN registry entries
-    * (s09, s09b, d09b, d09c, d09d, p08, p08b) consume the same trainer
-    * output; each previously re-ran the seed TakeOrdered, the threshold
-    * probe and the [[KmeansIters]] Lloyd jobs per query. The emb frame is
-    * barrier'd (lazy localCheckpoint), so consumers also share ONE
-    * normalized corpus materialization. The stamp key means an in-session
-    * corpus rewrite can never serve stale centroids; superseded stamps
-    * for the same dir are evicted (the countCache pattern).
+  /** Trained k-means state as a [[graft.SharedStage]]: SEVEN registry
+    * entries (s09, s09b, d09b, d09c, d09d, p08, p08b) consume the same
+    * trainer output (seed TakeOrdered, threshold probe and the
+    * [[KmeansIters]] Lloyd jobs). The emb frame is barrier'd (lazy
+    * localCheckpoint), so consumers also share ONE normalized corpus
+    * materialization.
     */
-  private val trainedCache = new java.util.concurrent.ConcurrentHashMap[
-    Tables.StampKey, (DataFrame, Array[Seq[Double]])]()
+  private val trainedStage =
+    graft.SharedStage[(DataFrame, Array[Seq[Double]])]("Similarity.trained")
   private def kmeansTrain(s: SparkSession,
       dir: String): (DataFrame, Array[Seq[Double]]) =
-    Tables.stampKeyed(trainedCache, s, dir)(kmeansTrainBuild(s, dir))
+    trainedStage(s, dir)(kmeansTrainBuild(s, dir))
 
   private def kmeansTrainBuild(s: SparkSession,
       dir: String): (DataFrame, Array[Seq[Double]]) = {
-    // TEMP r14 diagnostics — removed before commit
-    val tDiag = sys.env.contains("GRAFT_TRAIN_T")
-    var t0 = System.nanoTime()
-    def mark(l: String): Unit = if (tDiag) {
-      val t1 = System.nanoTime()
-      System.err.println(f"TRAIN $l%-10s ${(t1 - t0) / 1e9}%6.3f s")
-      t0 = t1
-    }
     val emb = Tables.barrier(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), asDouble(col("embedding")).as("e"))
@@ -1071,7 +1057,6 @@ object Similarity {
     val init: Array[Seq[Double]] = emb.orderBy("hr", "vec_id").limit(kk)
       .select("xi").collect()
       .map(_.getSeq[Long](0).map(_.toDouble / 1e6).toSeq)
-    mark("init")
     // Lloyd rounds see only the training sample (see
     // [[TrainPointsPerCentroid]]); the seed rows are its first kk members
     // by construction. The threshold is the sample-size-th smallest
@@ -1096,7 +1081,6 @@ object Similarity {
         emb.filter(col("hr") < tH ||
           (col("hr") === tH && col("vec_id") <= tV))
       }
-    mark("threshold")
     // The centroid table rides as a 1-row BROADCAST array, not as plan
     // literals (r11: with K = √N the literal spelling made the PLAN
     // O(K·dim) — ~2M literal doubles at 10⁹ vectors; a 16 MB centroid
@@ -1121,10 +1105,7 @@ object Similarity {
       val plan = assignedExact(s, train, cents)
         .groupBy(col("a.k").as("k"))
         .agg(aggs.head, aggs.tail: _*)
-      plan.queryExecution.executedPlan
-      mark("round-plan")
       val rows = plan.collect()
-      mark("round-exec")
       val next = cents.clone()
       rows.foreach { r =>
         val cnt = r.getLong(dim + 1)

@@ -388,16 +388,13 @@ object Text {
     * vocab size is the 1-row Q22 scalar; the per-doc aggregate is the one
     * corpus-sized shuffle, combined to |docs| rows.
     */
-  /** t20's scored frame memoized per (session, corpus@stamp) — consumed
-    * by the t20 entry AND the curation manifest's bigram-tail flag
-    * (optimization r13, the trained-state discipline: a run scores the
+  /** t20's scored frame as a [[graft.SharedStage]] — consumed by the t20
+    * entry AND the curation manifest's bigram-tail flag (a run scores the
     * corpus once and every gate reads the scores).
     */
-  private val bigramCache = new java.util.concurrent.ConcurrentHashMap[
-    graft.Tables.StampKey, DataFrame]()
+  private val bigramStage = graft.SharedStage[DataFrame]("Text.bigram")
   private val bigramLm: Q = (s, dir) =>
-    graft.Tables.stampKeyed(bigramCache, s, dir)(
-      graft.Tables.barrier(bigramLmBuild(s, dir)))
+    bigramStage(s, dir)(graft.Tables.barrier(bigramLmBuild(s, dir)))
 
   private def bigramLmBuild(s: SparkSession, dir: String): DataFrame = {
     val words = Tables.documents(s, dir)
@@ -751,19 +748,16 @@ object Text {
     * stream (doc_id, s) — the space-padded text after all rounds, merged
     * tokens joined with the U+0001 marker.
     */
-  /** Trained BPE state memoized per (session, corpus@stamp) — the
-    * sharedRolled / k-means-trainer discipline (optimization r13): t16
-    * and t18 each re-ran the full [[MergeRounds]]-round train loop (one
-    * count+argmax job pair and a barrier materialization per round) per
-    * query, although "real pipelines train once, then tokenize" is
-    * literally this operator's contract. The memo key embeds
-    * [[graft.Tables.dirStamp]], so an in-session corpus rewrite retrains.
+  /** Trained BPE state as a [[graft.SharedStage]]: t16 and t18 share one
+    * [[MergeRounds]]-round train loop (one count+argmax job pair and a
+    * barrier materialization per round) — "real pipelines train once,
+    * then tokenize" is literally this operator's contract.
     */
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    graft.Tables.StampKey, (Seq[(Int, String, String, Long)], DataFrame)]()
+  private val bpeStage = graft.SharedStage[
+    (Seq[(Int, String, String, Long)], DataFrame)]("Text.bpe")
   private def trainBpe(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) =
-    graft.Tables.stampKeyed(bpeCache, s, dir)(trainBpeBuild(s, dir))
+    bpeStage(s, dir)(trainBpeBuild(s, dir))
 
   private def trainBpeBuild(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, Long)], DataFrame) = {

@@ -158,7 +158,8 @@ object RuleCorpus {
     // pass and the identical plan.
     mart.select(col("*") +:
       (lag(lit(1), 1).over(bySym).isNotNull.as("has_prev") +:
-        (fields :+ "turnover").map(f => lag(f, 1).over(bySym).as(s"prev_$f"))): _*)
+        (fields :+ "turnover").distinct
+          .map(f => lag(f, 1).over(bySym).as(s"prev_$f"))): _*)
 
   /** Evaluate a table's rules in ONE pass: array of when-structs, explode,
     * drop non-fires. Output: one row per (symbol, bar, fired rule).
@@ -226,13 +227,19 @@ object RuleCorpus {
   def categoryQuery(cat: String): Q = (s, dir) =>
     // memo-off: the honest cost of one category's fired rows is
     // evaluating THAT category's rule subset, not building the whole
-    // 35-mart corpus to keep one category (the categoryQueryAt/g15
-    // spelling at base cadence; row-identity per the argument above,
-    // RuleCorpusSpec-pinned)
+    // 35-mart corpus to keep one category (row-identity per the argument
+    // above, RuleCorpusSpec-pinned)
     if (graft.Tables.sharedMemoOff(s))
-      rulesQuery(rulesFor(cat))(s, dir)
+      subsetFired(s, rulesFor(cat))(rulesQuery(_)(s, dir))
     else corpusFiredShared(s, dir).filter(col("category") === cat)
       .drop("message")
+
+  /** `eval(rules)` over a non-empty subset; a category without rules
+    * fires nothing, exactly like the memo-on projection of the corpus.
+    */
+  private def subsetFired(s: SparkSession, rules: Seq[CorpusRule])(
+      eval: Seq[CorpusRule] => DataFrame): DataFrame =
+    if (rules.isEmpty) s.emptyDataset[Fired9].toDF() else eval(rules)
 
   /** The pre-r13 direct evaluation of one category's rule subset — kept
     * as the semantic reference [[categoryQuery]] is pinned row-identical
@@ -255,62 +262,28 @@ object RuleCorpus {
     * fact once PER MART (35 redundant scan+shuffle passes for a
     * whole-corpus evaluation). The reference keeps interval bars as
     * materialized kline tables the scanners read
-    * (data-service roll-up jobs; see SURVEY §2.2 r04) — the memoized
-    * localCheckpoint is that shape, sized at fact/interval rows.
-    */
-  private val sharedRolled = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), DataFrame]()
-  /** Content fingerprint of a corpus dir's parquet tables (names, sizes,
-    * mtimes, one level into table directories). Every (session, dir)
-    * cache key embeds it, so an in-session rewrite of a served dir can
-    * never serve stale checkpointed data — the rewritten dir simply
-    * fingerprints to a NEW key (the r9 advisor finding: staleness used
-    * to depend on callers remembering to invalidate).
-    * [[invalidateShared]] stays the memory-release hook: superseded
-    * keys keep their pinned blocks until it runs.
-    */
-  private def dirKey(dir: String): String =
-    s"$dir@${graft.Tables.dirStamp(dir)}"
-  /** Build + checkpoint one cadence's roll-up, clustered for the marts:
-    * the roll-up aggregates on (symbol, bucket), so its natural
+    * (data-service roll-up jobs; see SURVEY §2.2 r04) — the checkpoint
+    * is that shape, sized at fact/interval rows.
+    *
+    * The roll-up aggregates on (symbol, bucket), so its natural
     * partitioning does NOT satisfy the marts' symbol-clustered window
     * distribution — left as-is, every one of the ~35 downstream mart
     * plans re-shuffles AND re-sorts the checkpointed frame. One
     * repartition(symbol) + in-partition (symbol, bucket_ts) sort BEFORE
-    * the checkpoint makes the LogicalRDD carry exactly the partitioning/
-    * ordering the window passes require (Dataset.localCheckpoint
-    * preserves both), so the whole cadence's dispatch runs exchange-free
-    * — one shuffle per cadence instead of one per (mart, cadence), the
-    * difference between 3 and ~105 shuffles for a native evaluation.
+    * a layout-keeping checkpoint makes the LogicalRDD carry exactly the
+    * partitioning/ordering the window passes require, so the whole
+    * cadence's dispatch runs exchange-free — one shuffle per cadence
+    * instead of one per (mart, cadence). Under a fact-frame override (the
+    * f03 priority cut) or memo-off the stage builds uncached but still
+    * checkpoints, so the cadence's mart plans share one materialization
+    * within the build.
     */
-  /** Eager layout-preserving checkpoint — hoisted to
-    * [[graft.Tables.checkpointKeepLayout]] (r14: the cycle uses the same
-    * discipline for its fused working frame; one definition, one AQE
-    * bracket lock JVM-wide).
-    */
-  private def checkpointKeepLayout(s: SparkSession, df: DataFrame): DataFrame =
-    graft.Tables.checkpointKeepLayout(s, df)
-
-  private def rolledClustered(s: SparkSession, dir: String,
-      seconds: Long): DataFrame =
-    checkpointKeepLayout(s,
+  private val rolledStage = graft.SharedStage[DataFrame]("RuleCorpus.rolled")
+  private[graft] def rolledShared(s: SparkSession, dir: String, seconds: Long): DataFrame =
+    rolledStage(s, dir, seconds)(graft.Tables.checkpointKeepLayout(s,
       graft.operators.Rollup.rollup(graft.Tables.candles(s, dir), seconds)
         .repartition(col("symbol"))
-        .sortWithinPartitions(col("symbol"), col("bucket_ts")))
-  private[graft] def rolledShared(s: SparkSession, dir: String, seconds: Long): DataFrame =
-    // under a fact-frame override (the f03 priority cut) the roll-up must
-    // neither be served from nor stored into the (session, dir)-keyed
-    // cache — it still checkpoints so the cadence's 35 mart plans share
-    // one materialization within the overridden build
-    if (graft.Tables.factOverrideActive)
-      rolledClustered(s, dir, seconds)
-    else if (graft.Tables.sharedMemoOff(s))
-      // r14 accounting: every cross-query memo honors the dial — the only
-      // state that persists across memo-off queries is the bucketed
-      // base-fact staging, charged once as the bench's staging_sec
-      rolledClustered(s, dir, seconds)
-    else sharedRolled.computeIfAbsent((s, dirKey(dir), seconds), _ =>
-      rolledClustered(s, dir, seconds))
+        .sortWithinPartitions(col("symbol"), col("bucket_ts"))))
 
   private def rulesQueryAt(rules: Seq[CorpusRule], seconds: Long): Q =
     (s, dir) => {
@@ -324,37 +297,26 @@ object RuleCorpus {
 
   /** The WHOLE-corpus rolled-cadence evaluation materialized once per
     * (session, dir, cadence) — the [[corpusFiredShared]] discipline at a
-    * rolled cadence (optimization r13): g17 re-ran the 35-mart 1h
-    * evaluation per query and g15 re-ran its volume subset beside it;
-    * the engine evaluates a cadence once per poll and fans the fired set
-    * (sqlite_engine.py:218-276). Fired rows carry the producing rule's
-    * category, so the per-category rolled entries are row-identical
-    * projections (the [[categoryQuery]] argument; RuleCorpusSpec pins the
-    * native-cadence twin).
+    * rolled cadence: the engine evaluates a cadence once per poll and
+    * fans the fired set (sqlite_engine.py:218-276). Fired rows carry the
+    * producing rule's category, so the per-category rolled entries are
+    * row-identical projections (the [[categoryQuery]] argument;
+    * RuleCorpusSpec pins the native-cadence twin).
     */
-  private val sharedRolledFired = new java.util.concurrent.ConcurrentHashMap[
-    graft.Tables.StampKey, DataFrame]()
+  private val rolledFiredStage =
+    graft.SharedStage[DataFrame]("RuleCorpus.rolledFired")
   private[graft] def rolledFiredShared(s: SparkSession, dir: String,
       seconds: Long): DataFrame =
-    // like rolledShared/nativeFiredShared, a fact-frame override must
-    // neither read nor populate the (session, dir) key (r13 ADVICE #1:
-    // the invariant every other fact-transiting shared memo enforces)
-    if (graft.Tables.factOverrideActive || graft.Tables.sharedMemoOff(s))
-      compacted(rulesQueryAt(AllRules, seconds)(s, dir)).localCheckpoint()
-    else graft.Tables.stampKeyed(sharedRolledFired, s, dir, seconds)(
+    rolledFiredStage(s, dir, seconds)(
       compacted(rulesQueryAt(AllRules, seconds)(s, dir)).localCheckpoint())
 
   def categoryQueryAt(cat: String, seconds: Long): Q = (s, dir) =>
-    // memo-off (the r14 bench's per-query accounting): the honest cost of
-    // "one category's fired rows at a cadence" is evaluating THAT
-    // category's rule subset — not building the whole 35-mart corpus to
-    // keep one category's rows. Row-identical by the categoryQuery
-    // argument (fired rows carry the producing rule's category literal;
-    // RuleCorpusSpec pins subset-evaluation ≡ corpus-projection), and
-    // MemoSpec pins this entry's memo-off ≡ memo-on rows directly. With
-    // memos on, the serving path projects the shared corpus as before.
+    // memo-off: the honest cost of "one category's fired rows at a
+    // cadence" is evaluating THAT category's rule subset — not building
+    // the whole 35-mart corpus to keep one category's rows. Row-identical
+    // by the categoryQuery argument; MemoSpec pins memo-off ≡ memo-on.
     if (graft.Tables.sharedMemoOff(s))
-      rulesQueryAt(rulesFor(cat), seconds)(s, dir)
+      subsetFired(s, rulesFor(cat))(rulesQueryAt(_, seconds)(s, dir))
     else rolledFiredShared(s, dir, seconds).filter(col("category") === cat)
 
   /** The engine's NATIVE timeframe dispatch (sqlite_engine.py:224-231):
@@ -1009,11 +971,12 @@ object RuleCorpus {
     * (sqlite_engine.py:218-276), it does not re-run the scanners per
     * consumer. The fired superset is sparse (O(fired signals), not
     * O(bars)), so the eager localCheckpoint pins only metadata-sized
-    * blocks; r7 measured the stateless triple recompute at ~48 s of a
-    * 162 s bench.
+    * blocks. The trailing checkpoint also hands a memo-off consumer a
+    * size-known LogicalRDD (a broadcast-eligible join side with a
+    * truncated plan).
     */
-  private val sharedFired =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val corpusFiredStage =
+    graft.SharedStage[DataFrame]("RuleCorpus.corpusFired")
   /** Compact a branch-union to the session's parallelism before its
     * shared checkpoint (optimization r13, guide §2.2 "fewer, larger
     * partitions"): the fired union is 35 branches × shuffle-partition
@@ -1028,19 +991,7 @@ object RuleCorpus {
       df.sparkSession.sparkContext.defaultParallelism))
 
   def corpusFiredShared(s: SparkSession, dir: String): DataFrame =
-    // memo-off (r14 bench accounting, extending the r13-verdict dial to
-    // the PRE-r13 result-shaped memos too): a whole-corpus consumer's
-    // honest per-query cost includes the corpus evaluation — only the
-    // within-query checkpoint sharing remains. Serving keeps the
-    // evaluate-once-fan-out memo (the reference's per-tick shape).
-    if (graft.Tables.sharedMemoOff(s))
-      // the trailing checkpoint stays even in the single-consumer path:
-      // it hands consumers a size-known LogicalRDD (broadcast-eligible
-      // join side, truncated plan) — eliding it was measured WORSE
-      // (g19 7.9->12.0 s, g20 9.6->12.9 s: the un-checkpointed cooled
-      // side lost its broadcast and the join went wide)
-      compacted(corpusFiredMsg(s, dir)).localCheckpoint()
-    else sharedFired.computeIfAbsent((s, dirKey(dir)), _ =>
+    corpusFiredStage(s, dir)(
       compacted(corpusFiredMsg(s, dir)).localCheckpoint())
 
   final case class Fired9(symbol: String, bucket_ts: Long, rule: String,
@@ -1319,7 +1270,7 @@ object RuleCorpus {
     * per-cadence checkpoints would be redundant work when the fused
     * union is checkpointed anyway. One repartition on the composite key
     * + in-partition sort before the checkpoint keeps every downstream
-    * mart window pass exchange-free and sort-free (the [[rolledClustered]]
+    * mart window pass exchange-free and sort-free (the [[rolledShared]]
     * layout argument, one dispatch level up).
     *
     * Deliberately NOT memoized (r11 ADVICE adjudication): the union
@@ -1363,7 +1314,7 @@ object RuleCorpus {
       rolledBy(secs)
         .withColumn("symbol", concat(col("symbol"), lit(sep + tf)))
     }.reduce(_.unionByName(_))
-    checkpointKeepLayout(s, union
+    graft.Tables.checkpointKeepLayout(s, union
       .repartition(col("symbol"))
       .sortWithinPartitions(col("symbol"), col("bucket_ts")))
   }
@@ -1373,11 +1324,7 @@ object RuleCorpus {
     * blocks are dead weight).
     */
   private[graft] def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ =>
-    }
+    graft.SharedStage.release(df)
 
   /** The FUSED native dispatch — row-identical to the per-cadence
     * [[nativeTfQuery]] (RuleCorpusSpec pins the equality through the
@@ -1448,21 +1395,13 @@ object RuleCorpus {
     * re-runs the scanners per consumer. g18 projects the tagged fired
     * set (drop message), g19 is the tf-keyed cooldown scan over it, g20
     * the cooldown + price join — exactly the [[corpusFiredShared]]
-    * pattern one dispatch level up (the r8 verdict's top ask: the
-    * standalone builds re-evaluated the 3-cadence × 35-mart corpus four
-    * times, 124 s of a 312 s bench). The fired superset is sparse
+    * pattern one dispatch level up. The fired superset is sparse
     * (O(fired signals)), so the checkpoint pins metadata-sized blocks.
-    * Like [[rolledShared]], a fact-frame override (the f03 priority cut)
-    * bypasses the cache entirely — overridden builds neither read nor
-    * poison the (session, dir) key.
     */
-  private val sharedNativeFired = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val nativeFiredStage =
+    graft.SharedStage[DataFrame]("RuleCorpus.nativeFired")
   def nativeFiredShared(s: SparkSession, dir: String): DataFrame =
-    if (graft.Tables.factOverrideActive) nativeFiredMsg(s, dir)
-    else if (graft.Tables.sharedMemoOff(s))
-      compacted(nativeFiredMsg(s, dir)).localCheckpoint()
-    else sharedNativeFired.computeIfAbsent((s, dirKey(dir)), _ =>
+    nativeFiredStage(s, dir)(
       compacted(nativeFiredMsg(s, dir)).localCheckpoint())
 
   /** The native dispatch's COOLED stream — [[cooldownScanRows]] over
@@ -1472,50 +1411,18 @@ object RuleCorpus {
     * (sqlite_engine.py:203-276), then fans the emitted set to
     * publication; g19 and g20 are projections of this (drop message /
     * join price). Sparse (≤ the fired superset), so the checkpoint is
-    * metadata-sized. Override-bypassed like its parents.
+    * metadata-sized.
     */
-  private val sharedNativeCooled = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  private val nativeCooledStage =
+    graft.SharedStage[DataFrame]("RuleCorpus.nativeCooled")
   def nativeCooledShared(s: SparkSession, dir: String): DataFrame =
-    if (graft.Tables.factOverrideActive)
-      cooldownScanRows(nativeFiredMsg(s, dir))
-    else if (graft.Tables.sharedMemoOff(s))
-      cooldownScanRows(nativeFiredShared(s, dir)).localCheckpoint()
-    else sharedNativeCooled.computeIfAbsent((s, dirKey(dir)), _ =>
+    nativeCooledStage(s, dir)(
       cooldownScanRows(nativeFiredShared(s, dir)).localCheckpoint())
 
-  /** Drop every memoized (session, dir)-keyed materialization owned by
-    * this registry — the roll-up, whole-corpus fired and native fired
-    * checkpoints — releasing their pinned blocks and forcing the next
-    * consumer to rebuild from the store. Since the cache keys embed the
-    * dir's content fingerprint ([[dirKey]]), an in-session rewrite can
-    * no longer serve stale data regardless of whether this runs — but a
-    * rewrite strands the superseded keys' pinned blocks, so call this at
-    * a quiescent point after regenerating dirs ([[graft.ScaleGen]] does,
-    * between generations) or to bound a long session's checkpoint
-    * footprint. Not safe concurrently with a running query over the
-    * same dir: the unpersist pulls blocks out from under in-flight
-    * tasks (they recompute, but from the possibly rewritten store).
+  /** Drop every shared-stage materialization, releasing its pinned
+    * blocks ([[graft.SharedStage.invalidateAll]]).
     */
-  def invalidateShared(): Unit = {
-    def drop(dfs: Iterable[DataFrame]): Unit = dfs.foreach { df =>
-      df.queryExecution.analyzed.foreach {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case _ =>
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    drop(sharedRolled.values.asScala)
-    drop(sharedFired.values.asScala)
-    drop(sharedRolledFired.values.asScala)
-    drop(sharedNativeFired.values.asScala)
-    drop(sharedNativeCooled.values.asScala)
-    drop(sharedRetainedCooled.values.asScala)
-    sharedRolled.clear(); sharedFired.clear(); sharedRolledFired.clear()
-    sharedNativeFired.clear(); sharedNativeCooled.clear()
-    sharedRetainedCooled.clear()
-  }
+  def invalidateShared(): Unit = graft.SharedStage.invalidateAll()
 
   /** g20 — the complete published SIGNAL object feed under the native
     * dispatch (sqlite_engine.py:246-266): each rule at each timeframe it
@@ -1531,8 +1438,9 @@ object RuleCorpus {
   private def feedPriceJoin(s: SparkSession, dir: String,
       cooled: DataFrame): DataFrame = {
     // one rolledCadences call covers the per-timeframe close AND kpat's
-    // daily close: memo-off this is a hierarchical single-scan build
-    // instead of four clustered checkpoints serving a 3-column projection
+    // daily close: memo-off it serves direct raw roll-ups per cadence
+    // (hierarchical staging was rejected, see rolledCadences) instead of
+    // four clustered checkpoints serving a 3-column projection
     val rolledBy =
       rolledCadences(s, dir, (TfSeconds.map(_._2) :+ 86400L).distinct)
     val px = TfSeconds.map { case (tf, secs) =>
@@ -1601,20 +1509,13 @@ object RuleCorpus {
     cooldownScanRows(retained)
   }
 
-  // once-per-(session, dir) like [[nativeCooledShared]]: the production
-  // dispatch cools once per tick and fans the emitted set out — without
-  // the memo every g20b evaluation re-ran the retention window + scan
-  // over the full fired stream (measured 10.5 s vs g20's 3.1 s at sf1,
-  // purely from losing the cache g20 enjoys)
-  private val sharedRetainedCooled = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+  // once per (session, dir) like [[nativeCooledShared]]: the production
+  // dispatch cools once per tick and fans the emitted set out
+  private val retainedCooledStage =
+    graft.SharedStage[DataFrame]("RuleCorpus.retainedCooled")
   private val nativeFeedRetained: Q = (s, dir) =>
-    feedPriceJoin(s, dir,
-      if (graft.Tables.factOverrideActive) retainedCooled(s, dir)
-      else if (graft.Tables.sharedMemoOff(s))
-        retainedCooled(s, dir).localCheckpoint()
-      else sharedRetainedCooled.computeIfAbsent((s, dirKey(dir)), _ =>
-        retainedCooled(s, dir).localCheckpoint()))
+    feedPriceJoin(s, dir, retainedCooledStage(s, dir)(
+      retainedCooled(s, dir).localCheckpoint()))
 
   /** One timeframe's feed oracle body: the cadence-rewritten corpus
     * oracle with messages in the branches, the fired set joined to the
@@ -1860,7 +1761,7 @@ object RuleCorpus {
     * per tick; the r8 f02 `weak` mark's root cost).
     */
   private def cutChecked(fact: DataFrame, prio: DataFrame): DataFrame =
-    checkpointKeepLayout(fact.sparkSession,
+    graft.Tables.checkpointKeepLayout(fact.sparkSession,
       fact.join(broadcast(prio), Seq("symbol"), "left_semi"))
 
   private val productionTick: Q = (s, dir) => {

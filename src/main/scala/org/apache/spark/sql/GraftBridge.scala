@@ -14,9 +14,17 @@ object GraftBridge {
   /** Register a session-scoped function backed by a Catalyst expression
     * builder — the SQL-text resolution path, which applies the analyzer's
     * window/aggregate wrapping that a hand-built expression tree misses.
+    * A name the session already has is left as it is, so callers may
+    * register on every use.
     */
   def registerFunction(spark: SparkSession, name: String,
-    builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry =
+      spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
+  }
 }

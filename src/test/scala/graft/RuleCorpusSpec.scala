@@ -244,6 +244,22 @@ class RuleCorpusSpec extends AnyFunSuite {
     }
   }
 
+  test("an unknown category fires nothing in both sharedMemo positions") {
+    // memo-on projects the shared corpus (no rows for the category);
+    // memo-off evaluates the category's rule subset, which is empty —
+    // both must return the same empty 9-column frame, not an error
+    val want = RuleCorpus.categoryQuery("core")(spark, TestSession.sf).columns
+    for (memo <- Seq("on", "off")) {
+      spark.conf.set("spark.graft.sharedMemo", memo)
+      try for (q <- Seq(RuleCorpus.categoryQuery("no_such_category"),
+          RuleCorpus.categoryQueryAt("no_such_category", 3600L))) {
+        val df = q(spark, TestSession.sf)
+        assert(df.columns.toSeq === want.toSeq, s"memo=$memo")
+        assert(df.isEmpty, s"memo=$memo")
+      } finally spark.conf.unset("spark.graft.sharedMemo")
+    }
+  }
+
   test("native-timeframe dispatch: the 1h slice IS the 1h corpus") {
     // g18 evaluates each rule at each timeframe it declares
     // (sqlite_engine.py:224-231). Every rule declares 1h (base.py:38
