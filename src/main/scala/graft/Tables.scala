@@ -51,8 +51,8 @@ object Tables {
     * "bucketing for co-located joins" made real, not a comment.
     */
   /** `buckets` is part of the key AND the staging table name (r13 ADVICE:
-    * changing `spark.graft.mat.corpusBuckets` mid-session silently served
-    * the previously materialized layout with the old bucket count).
+    * a bucket count changing mid-session silently served the previously
+    * materialized layout with the old count).
     */
   private final case class MatKey(appId: String, dir: String, name: String,
     stamp: Long, buckets: Int)
@@ -250,19 +250,17 @@ object Tables {
     * write, id-bucketed and id-sorted) gives every downstream scan
     * `corpusBuckets` tasks with NO per-query exchange, keeping the
     * zero-shuffle plan contracts intact. Bucket count derives from the
-    * session's core count (scale-adaptive, never a local constant) and is
-    * dialable via `spark.graft.mat.corpusBuckets`; a real deployment sets
-    * it to its executor-core budget — at 100 TB the staging write is the
-    * standard "materialize the index/layout once, scan it many times"
-    * pipeline stage the scaladocs already argue for the signature tables.
+    * session's core count (scale-adaptive, never a local constant) — at
+    * 100 TB the staging write is the standard "materialize the
+    * index/layout once, scan it many times" pipeline stage the scaladocs
+    * already argue for the signature tables.
     */
   private def corpusBuckets(spark: SparkSession): Int =
     // cores/4, floor 8 — measured at local[32]: 8 buckets beat 16 on a
     // mixed heavy+cheap entry set (9.2 vs 10.9 s; per-scan file overhead
     // taxes every sub-second doc entry while 8× parallelism already
     // captures most of the heavy projections' win)
-    spark.conf.getOption("spark.graft.mat.corpusBuckets").map(_.toInt)
-      .getOrElse(math.max(8, spark.sparkContext.defaultParallelism / 4))
+    math.max(8, spark.sparkContext.defaultParallelism / 4)
 
   def documents(spark: SparkSession, dir: String): DataFrame =
     materialized(spark, dir, "documents", Seq("doc_id"),
@@ -360,9 +358,7 @@ object Tables {
 
   def candles(spark: SparkSession, dir: String): DataFrame =
     Option(candleOverride.get).getOrElse(
-      materialized(spark, dir, "candles", Seq("symbol", "bucket_ts"),
-        spark.conf.getOption("spark.graft.mat.candleBuckets").map(_.toInt)
-          .getOrElse(8))(
+      materialized(spark, dir, "candles", Seq("symbol", "bucket_ts"), 8)(
         candlesDerived(spark, dir)))
 
   /** The raw events→candles derivation (see [[candles]] for the stored

@@ -119,16 +119,13 @@ object Cycle {
       graft.indicators.Market.queries ++
       graft.indicators.Patterns.queries
 
-  /** Working-frame partition dial: `spark.graft.cycle.workingPartitions`
-    * if set, else defaultParallelism/4 (= 8 on the local[32] harness).
-    * The working set is symbols × ≤500 bars — metadata-sized relative to
-    * the fact — so fewer/fuller tasks beat parallelism; a real cluster
-    * sets the conf to track its executor count (the r6/r7 carried ask:
-    * the dial must scale with the cluster, not stay a hard-coded 8).
+  /** Working-frame partition count: defaultParallelism/4 (= 8 on the
+    * local[32] harness), so it scales with the cluster. The working set is
+    * symbols × ≤500 bars — metadata-sized relative to the fact — so
+    * fewer/fuller tasks beat parallelism.
     */
   def workingPartitions(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.cycle.workingPartitions").map(_.toInt)
-      .getOrElse(math.max(2, s.sparkContext.defaultParallelism / 4))
+    math.max(2, s.sparkContext.defaultParallelism / 4)
 
   /** The per-interval working frames, each persisted: the 1m fact is read
     * ONCE, the 6 higher intervals are map-side roll-ups of that cache, and
@@ -254,29 +251,19 @@ object Cycle {
     * snapshots — O(symbols × fields) rows — so the checkpoint cache is
     * executor-memory trivia at any corpus size.
     */
-  /** Branch materialization pool width: `spark.graft.cycle.branchPool`
-    * if set, else min(16, cores) — defaultParallelism/2 on the local[32]
-    * harness, the r8 verdict's suggested sizing. Branch cost is
-    * DRIVER-bound (analyze/optimize/codegen per branch over
-    * metadata-sized frames), so the dial trades plan-pipeline
-    * parallelism against GC/scheduler contention with the executor's
-    * task threads. Measured on the r9 HEAD (fresh JVM per run, f01
-    * min-of-4 each): pool 12 → 20.6/22.3 s, pool 16 → 15.0/16.2 s,
+  /** Branch materialization pool width: min(16, cores) —
+    * defaultParallelism/2 on the local[32] harness, the r8 verdict's
+    * suggested sizing. Branch cost is DRIVER-bound (analyze/optimize/
+    * codegen per branch over metadata-sized frames), so the width trades
+    * plan-pipeline parallelism against GC/scheduler contention with the
+    * executor's task threads. Measured on the r9 HEAD (fresh JVM per run,
+    * f01 min-of-4 each): pool 12 → 20.6/22.3 s, pool 16 → 15.0/16.2 s,
     * pool 24 → 14.6/18.4 s; at 16 five fresh JVMs landed 15.0–16.2 s —
     * both the floor and the tightest band (r8's band at 12 was
     * 22.8–45.7 s).
     */
-  private def branchPool(branches: Seq[DataFrame]): Int =
-    branches.headOption.map(_.sparkSession)
-      .flatMap(_.conf.getOption("spark.graft.cycle.branchPool"))
-      .flatMap(v => v.toIntOption.filter(_ > 0).orElse {
-        // a malformed dial must not surface as a NumberFormatException
-        // deep inside query construction — fall back to the default
-        System.err.println(
-          s"[cycle] ignoring malformed spark.graft.cycle.branchPool='$v'")
-        None
-      })
-      .getOrElse(math.min(16, Runtime.getRuntime.availableProcessors))
+  private def branchPool: Int =
+    math.min(16, Runtime.getRuntime.availableProcessors)
 
   def runBranches(branches: Seq[DataFrame]): DataFrame = {
     import java.util.concurrent.Executors
@@ -284,7 +271,7 @@ object Cycle {
     import scala.concurrent.duration.Duration
     require(branches.nonEmpty,
       "runBranches needs at least one branch plan (empty indicator pack?)")
-    val pool = Executors.newFixedThreadPool(branchPool(branches))
+    val pool = Executors.newFixedThreadPool(branchPool)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val done = Await.result(

@@ -154,29 +154,16 @@ object Signals {
         col("sig.direction").as("direction"), col("sig.strength").as("strength"))
   }
 
-  /** The fired-signal row ([[graft.streaming.StreamRollup]]'s stream
-    * element type; the batch cooldown runs over untyped Rows).
-    */
-  final case class Fired(symbol: String, bucket_ts: Long, rule: String,
-    direction: String, strength: Int)
-
   /** Fired signals after per-(symbol, rule) cooldown (pg_engine.py:612-636):
     * a signal emits only if ≥ `cooldownSec` after the previously EMITTED
-    * one — a per-key greedy scan (stateful, not window-expressible), the
-    * batch twin of the streaming
-    * [[graft.streaming.StreamRollup.cooldownStream]]. Runs as the shared
-    * O(1)-state streaming scan ([[graft.signals.RuleCorpus
-    * .cooldownScanRows]]): hash-partition on (symbol, rule), sort within
-    * partitions, one constant-memory pass — no per-group buffering, so an
-    * always-firing rule over years of bars never materializes on a task's
-    * heap (the r8 verdict's last `it.toArray` group buffer, retired). The
-    * pg engine's non-strict `>= last + cd` emission maps to
-    * `strict = false`.
+    * one — a per-key greedy scan (stateful, not window-expressible), run
+    * as [[graft.signals.Cooldown.scan]] with the pg engine's non-strict
+    * `>= last + cd` emission.
     */
-  private def cooldown(s: SparkSession, signals: DataFrame, cd: Long): DataFrame =
-    graft.signals.RuleCorpus.cooldownScanRows(signals, _ => cd, strict = false)
+  private def cooldown(signals: DataFrame, cd: Long): DataFrame =
+    graft.signals.Cooldown.scan(signals, _ => cd, strict = false)
 
-  private val cooled: Q = (s, dir) => cooldown(s, fired(s, dir), 600L)
+  private val cooled: Q = (s, dir) => cooldown(fired(s, dir), 600L)
 
   /** G3 — freshness gate (pg_engine.py:510-519 `_is_fresh`): a series is
     * evaluated only when its latest row is younger than
@@ -212,7 +199,7 @@ object Signals {
     val freshSyms = freshness(s, dir)
       .filter(col("timeframe") === "1h" && col("is_fresh") === 1)
       .select("symbol")
-    cooldown(s, fired(s, dir).join(broadcast(freshSyms), Seq("symbol"),
+    cooldown(fired(s, dir).join(broadcast(freshSyms), Seq("symbol"),
       "left_semi"), 600L)
   }
 
@@ -312,22 +299,7 @@ object Signals {
          |fired AS (
          |$BRANCHES
          |),
-         |numbered AS MATERIALIZED (
-         |  SELECT *, row_number() OVER (PARTITION BY symbol, rule ORDER BY bucket_ts) AS rn
-         |  FROM fired),
-         |rec AS (
-         |  SELECT symbol, rule, direction, strength, bucket_ts, rn,
-         |         bucket_ts AS last_emit, TRUE AS emitted
-         |  FROM numbered WHERE rn = 1
-         |  UNION ALL
-         |  SELECT n.symbol, n.rule, n.direction, n.strength, n.bucket_ts, n.rn,
-         |         CASE WHEN n.bucket_ts >= r.last_emit + 600 THEN n.bucket_ts
-         |              ELSE r.last_emit END,
-         |         n.bucket_ts >= r.last_emit + 600
-         |  FROM rec r JOIN numbered n
-         |    ON n.symbol = r.symbol AND n.rule = r.rule AND n.rn = r.rn + 1)
-         |SELECT symbol, bucket_ts, rule, direction, CAST(strength AS INT) AS strength
-         |FROM rec WHERE emitted""".stripMargin,
+         |${cooldownSql("fired")}""".stripMargin,
     "g04_gated_signals" ->
       s"""WITH RECURSIVE ${Oracle.CANDLES},
          |$BASE,
@@ -340,20 +312,10 @@ object Signals {
          |$BRANCHES
          |),
          |gated AS (SELECT f.* FROM fired f JOIN fresh USING (symbol)),
-         |numbered AS MATERIALIZED (
-         |  SELECT *, row_number() OVER (PARTITION BY symbol, rule ORDER BY bucket_ts) AS rn
-         |  FROM gated),
-         |rec AS (
-         |  SELECT symbol, rule, direction, strength, bucket_ts, rn,
-         |         bucket_ts AS last_emit, TRUE AS emitted
-         |  FROM numbered WHERE rn = 1
-         |  UNION ALL
-         |  SELECT n.symbol, n.rule, n.direction, n.strength, n.bucket_ts, n.rn,
-         |         CASE WHEN n.bucket_ts >= r.last_emit + 600 THEN n.bucket_ts
-         |              ELSE r.last_emit END,
-         |         n.bucket_ts >= r.last_emit + 600
-         |  FROM rec r JOIN numbered n
-         |    ON n.symbol = r.symbol AND n.rule = r.rule AND n.rn = r.rn + 1)
-         |SELECT symbol, bucket_ts, rule, direction, CAST(strength AS INT) AS strength
-         |FROM rec WHERE emitted""".stripMargin)
+         |${cooldownSql("gated")}""".stripMargin)
+
+  /** [[cooldown]]'s recursive DuckDB twin over the fired relation `src`. */
+  private def cooldownSql(src: String): String =
+    graft.signals.Cooldown.sql(src, Seq("symbol", "rule"),
+      Seq("direction", "strength"), "600", strict = false)
 }

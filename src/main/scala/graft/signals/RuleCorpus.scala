@@ -162,23 +162,24 @@ object RuleCorpus {
           .map(f => lag(f, 1).over(bySym).as(s"prev_$f"))): _*)
 
   /** Evaluate a table's rules in ONE pass: array of when-structs, explode,
-    * drop non-fires. Output: one row per (symbol, bar, fired rule).
+    * drop non-fires. Output: one row per (symbol, bar, fired rule) —
+    * symbol, bucket_ts, then the struct's fields: rule, mart, category,
+    * subcategory, direction, strength, priority and `extra(rule)` (the
+    * rendered message, the declared timeframes), per-row expression work
+    * inside the same pass.
     */
-  def fired(ev: DataFrame, table: String, rules: Seq[CorpusRule]): DataFrame = {
+  def fired(ev: DataFrame, table: String, rules: Seq[CorpusRule],
+      extra: CorpusRule => Seq[Column] = _ => Nil): DataFrame = {
     val sigs = array(rules.map { r =>
-      when(expr(fullCond(r)), struct(
+      when(expr(fullCond(r)), struct((Seq(
         lit(r.name).as("rule"), lit(table).as("mart"),
         lit(r.category).as("category"), lit(r.subcategory).as("subcategory"),
         lit(r.direction).as("direction"), lit(r.strength).as("strength"),
-        lit(r.priority).as("priority")))
+        lit(r.priority).as("priority")) ++ extra(r)): _*))
     }: _*)
     ev.select(col("symbol"), col("bucket_ts"), explode(sigs).as("g"))
       .where(col("g").isNotNull)
-      .select(col("symbol"), col("bucket_ts"), col("g.rule").as("rule"),
-        col("g.mart").as("mart"), col("g.category").as("category"),
-        col("g.subcategory").as("subcategory"),
-        col("g.direction").as("direction"), col("g.strength").as("strength"),
-        col("g.priority").as("priority"))
+      .select(col("symbol"), col("bucket_ts"), col("g.*"))
   }
 
   /** Union a fired-branch list, materializing WIDE unions in parallel:
@@ -362,12 +363,17 @@ object RuleCorpus {
        |  WINDOW $w AS (PARTITION BY symbol ORDER BY bucket_ts))""".stripMargin
   }
 
-  private def branch(md: MartSeries.MartDef, r: CorpusRule): String =
+  /** One rule's fired branch over its eval CTE; `extras` are appended
+    * to the projection.
+    */
+  private def branch(md: MartSeries.MartDef, r: CorpusRule,
+      extras: Seq[String] = Nil): String =
     s"""SELECT symbol, bucket_ts, '${r.name}' AS rule, '${md.table}' AS mart,
        |  '${r.category}' AS category, '${r.subcategory}' AS subcategory,
        |  '${r.direction}' AS direction, CAST(${r.strength} AS INT) AS strength,
-       |  '${r.priority}' AS priority
-       |FROM e_${md.key} WHERE ${fullCond(r)}""".stripMargin
+       |  '${r.priority}' AS priority""".stripMargin +
+      extras.map(",\n  " + _).mkString +
+      s"\nFROM e_${md.key} WHERE ${fullCond(r)}"
 
   /** Assemble a category's oracle: candles (+metrics/series preludes as
     * needed) + the category's mart CTEs + eval CTEs + one branch per rule.
@@ -383,19 +389,30 @@ object RuleCorpus {
     ctes.replaceAll("(?m)^(\\s*)(\\w+) AS \\(", "$1$2 AS MATERIALIZED (")
       .replaceAll("(\\w*_rec) AS MATERIALIZED \\(", "$1 AS (")
 
-  private def rulesOracle(rules: Seq[CorpusRule]): String = {
+  /** The corpus-oracle prelude for a rule subset — `WITH [RECURSIVE]`,
+    * the candle CTE, the metrics/series preludes the subset's marts need,
+    * every mart and eval CTE (MATERIALIZED) — and one branch per rule,
+    * `UNION ALL`ed. `branchOf` spells a rule's branch over its mart.
+    */
+  private def corpusOracle(rules: Seq[CorpusRule])(
+      branchOf: (MartSeries.MartDef, CorpusRule) => String): (String, String) = {
     val byTable = rules.groupBy(_.tableKey).toSeq.sortBy(_._1)
-    val defs = byTable.map { case (tk, _) => MartSeries.all(tk) }
+      .map { case (tk, rs) => MartSeries.all(tk) -> rs }
+    val defs = byTable.map(_._1)
     val preludes =
       (if (defs.exists(_.needsMetrics)) Seq(Oracle.METRICS) else Nil) ++
       (if (defs.exists(_.needsSeries)) Seq(MartSeries.SeriesCte) else Nil)
     val ctes = materialize((preludes ++ defs.map(_.sqlCte) ++ defs.map(evalCte))
       .mkString(",\n"))
-    val branches = byTable.flatMap { case (tk, rs) =>
-      rs.map(r => branch(MartSeries.all(tk), r))
-    }.mkString("\nUNION ALL\n")
     val recur = if (defs.exists(_.needsRecursive)) "RECURSIVE " else ""
-    s"WITH $recur${Oracle.CANDLES},\n$ctes\n$branches"
+    val branches = byTable.flatMap { case (md, rs) => rs.map(branchOf(md, _)) }
+      .mkString("\nUNION ALL\n")
+    (s"WITH $recur${Oracle.CANDLES},\n$ctes", branches)
+  }
+
+  private def rulesOracle(rules: Seq[CorpusRule]): String = {
+    val (head, branches) = corpusOracle(rules)(branch(_, _))
+    s"$head\n$branches"
   }
 
   def categoryOracle(cat: String): String = rulesOracle(rulesFor(cat))
@@ -939,30 +956,12 @@ object RuleCorpus {
   def corpusFiredMsg(s: SparkSession, dir: String): DataFrame =
     firedUnion(AllRules.groupBy(_.tableKey).toSeq.sortBy(_._1).map { case (tk, rs) =>
       val md = MartSeries.all(tk)
-      firedMsg(evalFrame(md.build(s, dir), md.fields.map(_._1)), md, rs)
+      fired(evalFrame(md.build(s, dir), md.fields.map(_._1)), md.table, rs,
+        r => Seq(message(r)))
     })
 
-  /** [[fired]] + the rendered message in the same when-struct (per-row
-    * expression work; no extra shuffle).
-    */
-  private def firedMsg(ev: DataFrame, md: MartSeries.MartDef,
-      rs: Seq[CorpusRule]): DataFrame = {
-    val sigs = array(rs.map { r =>
-      when(expr(fullCond(r)), struct(
-        lit(r.name).as("rule"), lit(md.table).as("mart"),
-        lit(r.category).as("category"), lit(r.subcategory).as("subcategory"),
-        lit(r.direction).as("direction"), lit(r.strength).as("strength"),
-        lit(r.priority).as("priority"),
-        expr(messageSql(r)).as("message")))
-    }: _*)
-    ev.select(col("symbol"), col("bucket_ts"), explode(sigs).as("g"))
-      .where(col("g").isNotNull)
-      .select(col("symbol"), col("bucket_ts"), col("g.rule").as("rule"),
-        col("g.mart").as("mart"), col("g.category").as("category"),
-        col("g.subcategory").as("subcategory"),
-        col("g.direction").as("direction"), col("g.strength").as("strength"),
-        col("g.priority").as("priority"), col("g.message").as("message"))
-  }
+  /** A rule's rendered message as a fired-row column. */
+  private def message(r: CorpusRule): Column = expr(messageSql(r)).as("message")
 
   /** The 35-mart evaluation materialized ONCE per (session, corpus dir)
     * and shared by every whole-corpus entry (g13 cooldown, g14 summary,
@@ -1000,101 +999,9 @@ object RuleCorpus {
   private implicit val encFired9: org.apache.spark.sql.Encoder[Fired9] =
     org.apache.spark.sql.Encoders.product[Fired9]
 
-  /** [[Fired9]] + the rendered message (the [[corpusFiredMsg]] row). */
-  final case class Fired10(symbol: String, bucket_ts: Long, rule: String,
-    mart: String, category: String, subcategory: String, direction: String,
-    strength: Int, priority: String, message: String)
-  private implicit val encFired10: org.apache.spark.sql.Encoder[Fired10] =
-    org.apache.spark.sql.Encoders.product[Fired10]
-
-  /** Per-rule cooldown seconds. The engine keys cooldown state by RULE
-    * NAME (+symbol+timeframe, sqlite_engine.py:205-212), so same-named
-    * rules across tables share state — the duplicated names in the
-    * corpus carry identical cooldowns, so the collapse is lossless.
-    */
-  private val CdByRule: Map[String, Long] =
-    AllRules.map(r => r.name -> r.cooldown).toMap
-
-  /** The engine's cooldown dedup (sqlite_engine.py:205-212
-    * `_is_cooled_down`: strictly more than `cooldown` seconds since the
-    * previously EMITTED signal, per (symbol, rule name)) as a
-    * STREAMING greedy scan: hash-partition on the state key, sort within
-    * partitions so each key's rows are contiguous in (bucket_ts, mart)
-    * order (the tie-break both engines walk), then one O(1)-state pass
-    * per partition. Unlike a per-group `it.toArray` (the r6/r7 shape),
-    * no (symbol, rule) group is ever materialized on a task's heap — an
-    * always-firing rule over years of bars streams through the scan at
-    * constant memory (the r7 verdict's named heap exposure).
-    */
-  def cooldownScan(firedRows: DataFrame): DataFrame = {
-    val s = firedRows.sparkSession
-    import s.implicits._
-    firedRows.as[Fired10]
-      .repartition(col("symbol"), col("rule"))
-      .sortWithinPartitions(col("symbol"), col("rule"), col("bucket_ts"),
-        col("mart"))
-      .mapPartitions { it =>
-        var curSym: String = null
-        var curRule: String = null
-        var cd = 0L
-        var last = Long.MinValue
-        it.flatMap { f =>
-          if (f.symbol != curSym || f.rule != curRule) {
-            curSym = f.symbol; curRule = f.rule
-            cd = CdByRule(f.rule); last = Long.MinValue
-          }
-          if (last == Long.MinValue || f.bucket_ts > last + cd) {
-            last = f.bucket_ts
-            Some(f)
-          } else None
-        }
-      }
-      .toDF()
-  }
-
   /** g13 — the cooldown view over the shared corpus materialization. */
   private val corpusCooldown: Q = (s, dir) =>
-    cooldownScan(corpusFiredShared(s, dir)).drop("message")
-
-  /** [[Fired9]] + the evaluation timeframe (the [[nativeTfQuery]] row). */
-  final case class FiredTf(symbol: String, bucket_ts: Long, rule: String,
-    mart: String, category: String, subcategory: String, direction: String,
-    strength: Int, priority: String, timeframe: String)
-  private implicit val encFiredTf: org.apache.spark.sql.Encoder[FiredTf] =
-    org.apache.spark.sql.Encoders.product[FiredTf]
-
-  /** [[cooldownScan]] with the reference's FULL state key — the engine
-    * cools down per `f"{rule.name}_{symbol}_{timeframe}"`
-    * (sqlite_engine.py:203-212), so the same rule firing at 1h and 4h
-    * carries independent cooldown clocks. Same O(1)-state streaming
-    * greedy scan, timeframe added to the partition/sort/run key.
-    */
-  def cooldownScanTf(firedRows: DataFrame): DataFrame = {
-    val s = firedRows.sparkSession
-    import s.implicits._
-    firedRows.as[FiredTf]
-      .repartition(col("symbol"), col("rule"), col("timeframe"))
-      .sortWithinPartitions(col("symbol"), col("rule"), col("timeframe"),
-        col("bucket_ts"), col("mart"))
-      .mapPartitions { it =>
-        var curSym: String = null
-        var curRule: String = null
-        var curTf: String = null
-        var cd = 0L
-        var last = Long.MinValue
-        it.flatMap { f =>
-          if (f.symbol != curSym || f.rule != curRule || f.timeframe != curTf) {
-            curSym = f.symbol; curRule = f.rule; curTf = f.timeframe
-            cd = CdByRule(f.rule); last = Long.MinValue
-          }
-          if (last == Long.MinValue || f.bucket_ts > last + cd) {
-            last = f.bucket_ts
-            Some(f)
-          } else None
-        }
-      }
-      .toDF()
-  }
+    Cooldown.scan(corpusFiredShared(s, dir)).drop("message")
 
   /** g19 — the native dispatch's cooldown: the shared COOLED stream
     * (see [[nativeCooledShared]]) minus the message column.
@@ -1102,111 +1009,38 @@ object RuleCorpus {
   private val nativeTfCooldown: Q = (s, dir) =>
     nativeCooledShared(s, dir).drop("message")
 
-  /** [[nativeTfCooldown]]'s oracle: the g18 fired union as a CTE, the
-    * per-rule cooldowns as a VALUES lookup (duplicate rule names share
-    * identical cooldowns — the engine's shared-name state collapse), and
-    * the same recursive greedy twin as g13's with `timeframe` in the
-    * partition key and the join.
+  /** The corpus cooldowns as a `cds(rule, cd)` VALUES CTE (duplicate rule
+    * names share identical cooldowns — the engine's shared-name state
+    * collapse).
     */
-  private def nativeTfCooldownOracle: String = {
-    val cds = CdByRule.toSeq.sortBy(_._1)
+  private def cdsCte: String = {
+    val cds = Cooldown.CdByRule.toSeq.sortBy(_._1)
       .map { case (n, cd) => s"('$n', CAST($cd AS BIGINT))" }
       .mkString(",\n    ")
-    // fired + numbered MUST be MATERIALIZED (r13): both are referenced
-    // from inside the recursive `rec` member, and DuckDB re-inlines a
-    // plain CTE at every recursion step — the whole 3-cadence × 35-mart
-    // corpus was re-evaluated once per cooldown-chain step (~15× the
-    // query: 82 s materialized vs ~20 min, identical relation)
+    s"cds(rule, cd) AS (\n  VALUES $cds)"
+  }
+
+  /** The fired columns every corpus cooldown oracle carries past its key. */
+  private val FiredCarried =
+    Seq("mart", "category", "subcategory", "direction", "strength", "priority")
+
+  /** [[nativeTfCooldown]]'s oracle: the g18 fired union as a CTE, the
+    * per-rule cooldowns as [[cdsCte]], and the recursive greedy twin with
+    * `timeframe` in the state key.
+    */
+  private def nativeTfCooldownOracle: String =
+    // fired MUST be MATERIALIZED (r13): it is referenced from inside the
+    // recursive member, and DuckDB re-inlines a plain CTE at every
+    // recursion step — the whole 3-cadence × 35-mart corpus was
+    // re-evaluated once per cooldown-chain step (~15× the query: 82 s
+    // materialized vs ~20 min, identical relation)
     s"""WITH RECURSIVE fired AS MATERIALIZED (
        |${nativeTfOracle}
        |),
-       |cds(rule, cd) AS (
-       |  VALUES $cds),
-       |numbered AS MATERIALIZED (
-       |  SELECT f.*, c.cd,
-       |    row_number() OVER (PARTITION BY f.symbol, f.rule, f.timeframe
-       |      ORDER BY f.bucket_ts, f.mart) AS rn
-       |  FROM fired f JOIN cds c USING (rule)),
-       |rec AS (
-       |  SELECT symbol, rule, mart, category, subcategory, direction,
-       |         strength, priority, timeframe, bucket_ts, cd, rn,
-       |         bucket_ts AS last_emit, TRUE AS emitted
-       |  FROM numbered WHERE rn = 1
-       |  UNION ALL
-       |  SELECT n.symbol, n.rule, n.mart, n.category, n.subcategory,
-       |         n.direction, n.strength, n.priority, n.timeframe,
-       |         n.bucket_ts, n.cd, n.rn,
-       |         CASE WHEN n.bucket_ts > r.last_emit + n.cd THEN n.bucket_ts
-       |              ELSE r.last_emit END,
-       |         n.bucket_ts > r.last_emit + n.cd
-       |  FROM rec r JOIN numbered n
-       |    ON n.symbol = r.symbol AND n.rule = r.rule
-       |    AND n.timeframe = r.timeframe AND n.rn = r.rn + 1)
-       |SELECT symbol, bucket_ts, rule, mart, category, subcategory,
-       |       direction, strength, priority, timeframe
-       |FROM rec WHERE emitted""".stripMargin
-  }
-
-  /** [[cooldownScan]]/[[cooldownScanTf]] generalized to ANY fired schema:
-    * the state key is (symbol, rule) plus `timeframe` when the frame has
-    * one; extra columns (message, price) ride along untouched; `mart`
-    * joins the sort as the tie-break when present. Same repartition →
-    * sortWithinPartitions → O(1)-state streaming greedy scan, expressed
-    * over [[Row]]s so new feed shapes need no bespoke case class.
-    *
-    * `cdOf` maps a rule name to its cooldown seconds — the default
-    * serves the corpus registry and FAILS FAST with the offending rule
-    * name on anything outside it (a bare `Map.apply` would surface as a
-    * bare NoSuchElementException deep inside a task); callers scanning
-    * non-corpus feeds pass their own `cdOf`. `strict` selects the
-    * emission comparison — the sqlite engine re-emits strictly MORE
-    * than `cd` after the last emission (sqlite_engine.py:205-212, the
-    * default), the pg engine at `cd` or more (pg_engine.py:612-636,
-    * the g02 path).
-    */
-  def cooldownScanRows(firedRows: DataFrame,
-      cdOf: String => Long = rule => CdByRule.getOrElse(rule,
-        throw new IllegalArgumentException(
-          s"rule '$rule' has no registered cooldown: pass an explicit " +
-            "cdOf to cooldownScanRows for non-corpus feeds")),
-      strict: Boolean = true): DataFrame = {
-    val schema = firedRows.schema
-    val hasTf = schema.fieldNames.contains("timeframe")
-    val keyCols = Seq("symbol", "rule") ++ (if (hasTf) Seq("timeframe") else Nil)
-    val tieBreak =
-      if (schema.fieldNames.contains("mart")) Seq(col("mart")) else Nil
-    val iSym = schema.fieldIndex("symbol")
-    val iRule = schema.fieldIndex("rule")
-    val iTf = if (hasTf) schema.fieldIndex("timeframe") else -1
-    val iTs = schema.fieldIndex("bucket_ts")
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(schema)
-    firedRows
-      .repartition(keyCols.map(col): _*)
-      .sortWithinPartitions(
-        (keyCols.map(col) ++ Seq(col("bucket_ts")) ++ tieBreak): _*)
-      .mapPartitions { it =>
-        var kSym: String = null
-        var kRule: String = null
-        var kTf: String = null
-        var cd = 0L
-        var last = Long.MinValue
-        it.filter { r =>
-          val sym = r.getString(iSym)
-          val rule = r.getString(iRule)
-          val tf = if (iTf >= 0) r.getString(iTf) else null
-          if (sym != kSym || rule != kRule || tf != kTf) {
-            kSym = sym; kRule = rule; kTf = tf
-            cd = cdOf(rule); last = Long.MinValue
-          }
-          val ts = r.getLong(iTs)
-          val cooled =
-            if (strict) ts > last + cd else ts >= last + cd
-          if (last == Long.MinValue || cooled) { last = ts; true }
-          else false
-        }
-      }
-  }
+       |$cdsCte,
+       |${Cooldown.sql("fired JOIN cds USING (rule)",
+            Seq("symbol", "rule", "timeframe"), FiredCarried, "n.cd",
+            strict = true)}""".stripMargin
 
   /** Reference tables whose scanner writes a price column the published
     * Signal's falsy-coalesce can read (sqlite_engine.py:250:
@@ -1231,33 +1065,6 @@ object RuleCorpus {
       "donch", "kelt")
       .map(k => MartSeries.all(k).table)
   private val KpatTable = MartSeries.all("kpat").table
-
-  /** [[firedMsg]]/[[fired]] with each rule's DECLARED timeframes riding
-    * in the when-struct (`tfs`), so the fused dispatch can filter (candle
-    * marts) or fan (the cadence-independent metrics mart) post-evaluation.
-    */
-  private def firedTfs(ev: DataFrame, md: MartSeries.MartDef,
-      rs: Seq[CorpusRule], withMsg: Boolean): DataFrame = {
-    val sigs = array(rs.map { r =>
-      val fields = Seq(
-        lit(r.name).as("rule"), lit(md.table).as("mart"),
-        lit(r.category).as("category"), lit(r.subcategory).as("subcategory"),
-        lit(r.direction).as("direction"), lit(r.strength).as("strength"),
-        lit(r.priority).as("priority")) ++
-        (if (withMsg) Seq(expr(messageSql(r)).as("message")) else Nil) :+
-        array(r.timeframes.map(lit): _*).as("tfs")
-      when(expr(fullCond(r)), struct(fields: _*))
-    }: _*)
-    val msgCol = if (withMsg) Seq(col("g.message").as("message")) else Nil
-    ev.select(col("symbol"), col("bucket_ts"), explode(sigs).as("g"))
-      .where(col("g").isNotNull)
-      .select(Seq(col("symbol"), col("bucket_ts"), col("g.rule").as("rule"),
-        col("g.mart").as("mart"), col("g.category").as("category"),
-        col("g.subcategory").as("subcategory"),
-        col("g.direction").as("direction"), col("g.strength").as("strength"),
-        col("g.priority").as("priority")) ++ msgCol :+
-        col("g.tfs").as("tfs"): _*)
-  }
 
   /** Every cadence's rolled bars as ONE composite-keyed clustered
     * checkpoint: symbol becomes `symbol + U+0001 + tf` (the
@@ -1347,12 +1154,17 @@ object RuleCorpus {
       withMsg: Boolean): DataFrame = {
     val sep = graft.operators.Mart.IvTagSep
     val fused = fusedRolledFrame(s, dir)
+    // each rule's DECLARED timeframes ride in the when-struct (`tfs`), so
+    // candle marts filter and the metrics mart fans post-evaluation
+    val extra = (r: CorpusRule) =>
+      (if (withMsg) Seq(message(r)) else Nil) :+
+        array(r.timeframes.map(lit): _*).as("tfs")
     val branches = AllRules.groupBy(_.tableKey).toSeq.sortBy(_._1)
       .map { case (tk, rs) =>
         val md = MartSeries.all(tk)
         if (md.needsMetrics)
-          firedTfs(evalFrame(md.build(s, dir), md.fields.map(_._1)),
-              md, rs, withMsg)
+          fired(evalFrame(md.build(s, dir), md.fields.map(_._1)),
+              md.table, rs, extra)
             .withColumn("timeframe", explode(col("tfs")))
             // constrain the fan to the dispatch's cadence set — the
             // candle branch is structurally limited to TfSeconds tags,
@@ -1362,8 +1174,8 @@ object RuleCorpus {
             .where(col("timeframe").isin(TfSeconds.map(_._1): _*))
             .drop("tfs")
         else
-          firedTfs(evalFrame(md.buildFrom(s, dir, fused),
-              md.fields.map(_._1)), md, rs, withMsg)
+          fired(evalFrame(md.buildFrom(s, dir, fused),
+              md.fields.map(_._1)), md.table, rs, extra)
             .withColumn("timeframe", substring_index(col("symbol"), sep, -1))
             .withColumn("symbol", substring_index(col("symbol"), sep, 1))
             .where(array_contains(col("tfs"), col("timeframe")))
@@ -1404,7 +1216,7 @@ object RuleCorpus {
     nativeFiredStage(s, dir)(
       compacted(nativeFiredMsg(s, dir)).localCheckpoint())
 
-  /** The native dispatch's COOLED stream — [[cooldownScanRows]] over
+  /** The native dispatch's COOLED stream — [[Cooldown.scan]] over
     * [[nativeFiredShared]] (full (symbol, rule, timeframe) state key,
     * message riding along) — materialized once per (session, dir): the
     * engine's single dispatch loop cools down once per tick
@@ -1417,7 +1229,7 @@ object RuleCorpus {
     graft.SharedStage[DataFrame]("RuleCorpus.nativeCooled")
   def nativeCooledShared(s: SparkSession, dir: String): DataFrame =
     nativeCooledStage(s, dir)(
-      cooldownScanRows(nativeFiredShared(s, dir)).localCheckpoint())
+      Cooldown.scan(nativeFiredShared(s, dir)).localCheckpoint())
 
   /** Drop every shared-stage materialization, releasing its pinned
     * blocks ([[graft.SharedStage.invalidateAll]]).
@@ -1506,7 +1318,7 @@ object RuleCorpus {
       lit(RetentionDefault))
     val retained = fired.withColumn("ret_rn", row_number().over(w))
       .filter(col("ret_rn") <= retLim).drop("ret_rn")
-    cooldownScanRows(retained)
+    Cooldown.scan(retained)
   }
 
   // once per (session, dir) like [[nativeCooledShared]]: the production
@@ -1522,25 +1334,12 @@ object RuleCorpus {
     * rolled candles for the Signal price.
     */
   private def feedOracleAt(rules: Seq[CorpusRule], seconds: Long): String = {
-    val byTable = rules.groupBy(_.tableKey).toSeq.sortBy(_._1)
-    val defs = byTable.map { case (tk, _) => MartSeries.all(tk) }
-    val preludes =
-      (if (defs.exists(_.needsMetrics)) Seq(Oracle.METRICS) else Nil) ++
-      (if (defs.exists(_.needsSeries)) Seq(MartSeries.SeriesCte) else Nil)
-    val ctes = materialize((preludes ++ defs.map(_.sqlCte) ++ defs.map(evalCte))
-      .mkString(",\n"))
-    val branches = byTable.flatMap { case (tk, rs) =>
-      rs.map { r =>
-        branch(MartSeries.all(tk), r)
-          .replace("\nFROM e_", s",\n  ${messageSql(r)} AS message\nFROM e_")
-      }
-    }.mkString("\nUNION ALL\n")
-    val recur = if (defs.exists(_.needsRecursive)) "RECURSIVE " else ""
+    val (head, branches) = corpusOracle(rules)((md, r) =>
+      branch(md, r, Seq(s"${messageSql(r)} AS message")))
     val pset = (PriceTables - KpatTable).toSeq.sorted
       .map(t => s"'$t'").mkString(", ")
     val body =
-      s"""WITH $recur${Oracle.CANDLES},
-         |$ctes,
+      s"""$head,
          |fired_l AS MATERIALIZED (
          |$branches
          |),
@@ -1576,9 +1375,6 @@ object RuleCorpus {
       val body = feedOracleAt(AllRules.filter(_.timeframes.contains(tf)), secs)
       s"SELECT b.*, '$tf' AS timeframe FROM (\n$body\n) b"
     }.mkString("\nUNION ALL\n")
-    val cds = CdByRule.toSeq.sortBy(_._1)
-      .map { case (n, cd) => s"('$n', CAST($cd AS BIGINT))" }
-      .mkString(",\n    ")
     val firedSrc = if (!retention) "fired" else {
       val whens = RetentionByTf.toSeq.sortBy(_._1)
         .map { case (tf, n) => s"WHEN '$tf' THEN $n" }
@@ -1596,31 +1392,10 @@ object RuleCorpus {
     s"""WITH RECURSIVE fired AS MATERIALIZED (
        |$union
        |),
-       |cds(rule, cd) AS (
-       |  VALUES $cds),
-       |numbered AS MATERIALIZED (
-       |  SELECT f.*, c.cd,
-       |    row_number() OVER (PARTITION BY f.symbol, f.rule, f.timeframe
-       |      ORDER BY f.bucket_ts, f.mart) AS rn
-       |  FROM $firedSrc f JOIN cds c USING (rule)),
-       |rec AS (
-       |  SELECT symbol, rule, mart, category, subcategory, direction,
-       |         strength, priority, timeframe, message, price, bucket_ts,
-       |         cd, rn, bucket_ts AS last_emit, TRUE AS emitted
-       |  FROM numbered WHERE rn = 1
-       |  UNION ALL
-       |  SELECT n.symbol, n.rule, n.mart, n.category, n.subcategory,
-       |         n.direction, n.strength, n.priority, n.timeframe,
-       |         n.message, n.price, n.bucket_ts, n.cd, n.rn,
-       |         CASE WHEN n.bucket_ts > r.last_emit + n.cd THEN n.bucket_ts
-       |              ELSE r.last_emit END,
-       |         n.bucket_ts > r.last_emit + n.cd
-       |  FROM rec r JOIN numbered n
-       |    ON n.symbol = r.symbol AND n.rule = r.rule
-       |    AND n.timeframe = r.timeframe AND n.rn = r.rn + 1)
-       |SELECT symbol, bucket_ts, rule, mart, category, subcategory,
-       |       direction, strength, priority, timeframe, price, message
-       |FROM rec WHERE emitted""".stripMargin
+       |$cdsCte,
+       |${Cooldown.sql(s"$firedSrc JOIN cds USING (rule)",
+            Seq("symbol", "rule", "timeframe"),
+            FiredCarried ++ Seq("message", "price"), "n.cd", strict = true)}""".stripMargin
   }
 
   /** g14 — corpus summary: fire counts and distinct symbols per rule —
@@ -1643,92 +1418,41 @@ object RuleCorpus {
         col("direction"), col("strength"), col("message"))
 
   private def messagesOracle: String = {
-    val byTable = AllRules.groupBy(_.tableKey).toSeq.sortBy(_._1)
-    val defs = byTable.map { case (tk, _) => MartSeries.all(tk) }
-    val preludes =
-      (if (defs.exists(_.needsMetrics)) Seq(Oracle.METRICS) else Nil) ++
-      (if (defs.exists(_.needsSeries)) Seq(MartSeries.SeriesCte) else Nil)
-    val ctes = materialize((preludes ++ defs.map(_.sqlCte) ++ defs.map(evalCte))
-      .mkString(",\n"))
-    val branches = byTable.flatMap { case (tk, rs) =>
-      rs.map { r =>
-        val md = MartSeries.all(tk)
-        s"""SELECT symbol, bucket_ts, '${r.name}' AS rule, '${md.table}' AS mart,
-           |  '${r.direction}' AS direction, CAST(${r.strength} AS INT) AS strength,
-           |  ${messageSql(r)} AS message
-           |FROM e_${md.key} WHERE ${fullCond(r)}""".stripMargin
-      }
-    }.mkString("\nUNION ALL\n")
-    val recur = if (defs.exists(_.needsRecursive)) "RECURSIVE " else ""
-    s"WITH $recur${Oracle.CANDLES},\n$ctes\n$branches"
+    val (head, branches) = corpusOracle(AllRules)((md, r) =>
+      s"""SELECT symbol, bucket_ts, '${r.name}' AS rule, '${md.table}' AS mart,
+         |  '${r.direction}' AS direction, CAST(${r.strength} AS INT) AS strength,
+         |  ${messageSql(r)} AS message
+         |FROM e_${md.key} WHERE ${fullCond(r)}""".stripMargin)
+    s"$head\n$branches"
   }
 
-  /** Oracle prelude + fired CTE for the WHOLE corpus (every mart/eval CTE
-    * once, one branch per rule; `withCd` appends the rule's cooldown,
-    * `withMsg` the rendered message).
+  /** Oracle prelude + fired CTE for the WHOLE corpus (`withMsg` appends
+    * the rendered message to every branch).
     */
-  private def corpusFiredSql(withCd: Boolean,
-      withMsg: Boolean = false): String = {
-    val byTable = AllRules.groupBy(_.tableKey).toSeq.sortBy(_._1)
-    val defs = byTable.map { case (tk, _) => MartSeries.all(tk) }
-    val preludes =
-      (if (defs.exists(_.needsMetrics)) Seq(Oracle.METRICS) else Nil) ++
-      (if (defs.exists(_.needsSeries)) Seq(MartSeries.SeriesCte) else Nil)
-    val ctes = materialize((preludes ++ defs.map(_.sqlCte) ++ defs.map(evalCte))
-      .mkString(",\n"))
-    val branches = byTable.flatMap { case (tk, rs) =>
-      rs.map { r =>
-        val extras =
-          (if (withMsg) Seq(s"${messageSql(r)} AS message") else Nil) ++
-          (if (withCd) Seq(s"CAST(${r.cooldown} AS BIGINT) AS cd") else Nil)
-        val b = branch(MartSeries.all(tk), r)
-        if (extras.isEmpty) b
-        else b.replace("\nFROM e_",
-          s",\n  ${extras.mkString(",\n  ")}\nFROM e_")
-      }
-    }.mkString("\nUNION ALL\n")
-    val recur = if (defs.exists(_.needsRecursive)) "RECURSIVE " else ""
-    // MATERIALIZED: cooldownSql's recursive member re-references the
+  private def corpusFiredSql(withMsg: Boolean): String = {
+    val (head, branches) = corpusOracle(AllRules)((md, r) => branch(md, r,
+      if (withMsg) Seq(s"${messageSql(r)} AS message") else Nil))
+    // MATERIALIZED: the cooldown's recursive member re-references the
     // fired relation per step (see nativeTfCooldownOracle, r13);
     // single-reference consumers materialize once — no cost either way
-    s"WITH $recur${Oracle.CANDLES},\n$ctes,\nfired AS MATERIALIZED (\n$branches\n)"
+    s"$head,\nfired AS MATERIALIZED (\n$branches\n)"
   }
 
   /** The recursive greedy-scan cooldown twin over the whole-corpus fired
     * CTE; `withMsg` threads the rendered message through the recursion
     * (the f02 feed shape).
     */
-  private def cooldownSql(withMsg: Boolean): String = {
-    val msg = if (withMsg) ", message" else ""
-    val nMsg = if (withMsg) ", n.message" else ""
-    s"""${corpusFiredSql(withCd = true, withMsg = withMsg)},
-       |numbered AS MATERIALIZED (
-       |  SELECT *, row_number() OVER (PARTITION BY symbol, rule
-       |    ORDER BY bucket_ts, mart) AS rn
-       |  FROM fired),
-       |rec AS (
-       |  SELECT symbol, rule, mart, category, subcategory, direction,
-       |         strength, priority$msg, bucket_ts, cd, rn,
-       |         bucket_ts AS last_emit, TRUE AS emitted
-       |  FROM numbered WHERE rn = 1
-       |  UNION ALL
-       |  SELECT n.symbol, n.rule, n.mart, n.category, n.subcategory,
-       |         n.direction, n.strength, n.priority$nMsg, n.bucket_ts, n.cd,
-       |         n.rn,
-       |         CASE WHEN n.bucket_ts > r.last_emit + n.cd THEN n.bucket_ts
-       |              ELSE r.last_emit END,
-       |         n.bucket_ts > r.last_emit + n.cd
-       |  FROM rec r JOIN numbered n
-       |    ON n.symbol = r.symbol AND n.rule = r.rule AND n.rn = r.rn + 1)
-       |SELECT symbol, bucket_ts, rule, mart, category, subcategory,
-       |       direction, strength, priority$msg
-       |FROM rec WHERE emitted""".stripMargin
-  }
+  private def cooldownSql(withMsg: Boolean): String =
+    s"""${corpusFiredSql(withMsg)},
+       |$cdsCte,
+       |${Cooldown.sql("fired JOIN cds USING (rule)", Seq("symbol", "rule"),
+            FiredCarried ++ (if (withMsg) Seq("message") else Nil), "n.cd",
+            strict = true)}""".stripMargin
 
   private def cooldownOracle: String = cooldownSql(withMsg = false)
 
   private def summaryOracle: String =
-    s"""${corpusFiredSql(withCd = false)}
+    s"""${corpusFiredSql(withMsg = false)}
        |SELECT category, subcategory, rule, mart, direction, strength,
        |       priority, CAST(count(*) AS BIGINT) AS fires,
        |       CAST(count(DISTINCT symbol) AS BIGINT) AS symbols
@@ -1774,7 +1498,7 @@ object RuleCorpus {
         corpusFiredMsg(s, dir)
       }
     }
-    cooldownScan(firedRows)
+    Cooldown.scan(firedRows)
   }
 
   /** [[productionTick]]'s DuckDB twin: the whole-corpus cooldown+message
@@ -1842,7 +1566,7 @@ object RuleCorpus {
         nativeFiredFused(s, dir, withMsg = false)
       }
     }
-    cooldownScanTf(firedRows)
+    Cooldown.scan(firedRows)
   }
 
   /** [[nativeTick]]'s DuckDB twin: the g19 oracle with the r07 ranking

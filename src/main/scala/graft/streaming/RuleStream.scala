@@ -15,14 +15,15 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
   *   in its pandas cache) → the SAME shared-dialect rule battery the batch
   *   corpus evaluates ([[RuleCorpus.fired]] is stateless column logic, so
   *   it applies to a streaming frame unchanged — single-source rule
-  *   semantics across batch, oracle and stream) → per-rule cooldown state.
+  *   semantics across batch, oracle and stream) → per-rule cooldown state
+  *   ([[graft.signals.Cooldown.stream]]).
   *
   * The MACD table is the demonstrator (8 corpus rules: the volume pack's
   * five + core's zero-axis three); every other EWMA-chain mart series
   * streams with the same state shape. Parity with the batch corpus is
-  * pinned in RuleCorpusSpec: a file-replayed candle stream fires exactly
-  * the batch `corpusFired` rows for the MACD mart, cooled exactly like
-  * g13's greedy scan.
+  * pinned in RuleCorpusSpec (a file-replayed candle stream fires exactly
+  * the batch `corpusFired` rows for the MACD mart) and CooldownSpec (the
+  * streamed cooldown emits exactly the batch scan's rows).
   *
   * Scale shape: state is O(symbols) fixed-width registers (7 doubles +
   * 2 longs per symbol — KBs per thousand symbols); the shuffle key is the
@@ -110,105 +111,4 @@ object RuleStream {
   def macdRuleStream(candles1m: DataFrame): DataFrame =
     RuleCorpus.fired(macdEvalStream(candles1m).toDF(),
       "MACD柱状扫描器", RuleCorpus.AllRules.filter(_.tableKey == "macd"))
-
-  private[graft] final case class FiredWm9(symbol: String, bucket_ts: Long,
-    rule: String, mart: String, category: String, subcategory: String,
-    direction: String, strength: Int, priority: String,
-    event_time: java.sql.Timestamp)
-
-  /** Per-rule cooldown over a streamed fired-signal frame — g13's greedy
-    * scan (strictly-greater gaps, per-rule durations) as
-    * flatMapGroupsWithState keyed (symbol, rule), state = last emit ts,
-    * watermark-evicted once 2× the rule's cooldown has passed.
-    */
-  def corpusCooldownStream(fired: DataFrame): DataFrame = {
-    val spark = fired.sparkSession
-    import spark.implicits._
-    implicit val encWm: Encoder[FiredWm9] = Encoders.product[FiredWm9]
-    implicit val encOut: Encoder[RuleCorpus.Fired9] =
-      Encoders.product[RuleCorpus.Fired9]
-    implicit val encKey: Encoder[(String, String)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    val cds = RuleCorpus.AllRules.map(r => r.name -> r.cooldown).toMap
-    fired
-      .withColumn("event_time", timestamp_seconds(col("bucket_ts")))
-      .withWatermark("event_time", "1 second")
-      .as[FiredWm9]
-      .groupByKey(f => (f.symbol, f.rule))
-      .flatMapGroupsWithState[Long, RuleCorpus.Fired9](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (key, it, state) =>
-        if (state.hasTimedOut) { state.remove(); Iterator.empty }
-        else {
-          val cd = cds(key._2)
-          val fs = it.toArray.sortBy(f => (f.bucket_ts, f.mart))
-          var last = state.getOption.getOrElse(Long.MinValue)
-          val out = Seq.newBuilder[RuleCorpus.Fired9]
-          fs.foreach { f =>
-            if (last == Long.MinValue || f.bucket_ts > last + cd) {
-              out += RuleCorpus.Fired9(f.symbol, f.bucket_ts, f.rule, f.mart,
-                f.category, f.subcategory, f.direction, f.strength, f.priority)
-              last = f.bucket_ts
-            }
-          }
-          if (last != Long.MinValue) {
-            state.update(last)
-            state.setTimeoutTimestamp(math.max((last + 2 * cd) * 1000L,
-              state.getCurrentWatermarkMs() + 1000L))
-          }
-          out.result().iterator
-        }
-      }
-      .toDF()
-  }
-
-  private[graft] final case class FiredWmTf(symbol: String, bucket_ts: Long,
-    rule: String, mart: String, category: String, subcategory: String,
-    direction: String, strength: Int, priority: String, timeframe: String,
-    event_time: java.sql.Timestamp)
-
-  /** [[corpusCooldownStream]] with the engine's FULL cooldown state key —
-    * `f"{rule}_{symbol}_{timeframe}"` (sqlite_engine.py:203-212) — the
-    * streaming twin of [[RuleCorpus.cooldownScanTf]] (g19): the same
-    * rule's 1h and 4h streams thin under independent clocks.
-    */
-  def corpusCooldownStreamTf(fired: DataFrame): DataFrame = {
-    val spark = fired.sparkSession
-    import spark.implicits._
-    implicit val encWm: Encoder[FiredWmTf] = Encoders.product[FiredWmTf]
-    implicit val encOut: Encoder[RuleCorpus.FiredTf] =
-      Encoders.product[RuleCorpus.FiredTf]
-    implicit val encKey: Encoder[(String, String, String)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.STRING)
-    val cds = RuleCorpus.AllRules.map(r => r.name -> r.cooldown).toMap
-    fired
-      .withColumn("event_time", timestamp_seconds(col("bucket_ts")))
-      .withWatermark("event_time", "1 second")
-      .as[FiredWmTf]
-      .groupByKey(f => (f.symbol, f.rule, f.timeframe))
-      .flatMapGroupsWithState[Long, RuleCorpus.FiredTf](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (key, it, state) =>
-        if (state.hasTimedOut) { state.remove(); Iterator.empty }
-        else {
-          val cd = cds(key._2)
-          val fs = it.toArray.sortBy(f => (f.bucket_ts, f.mart))
-          var last = state.getOption.getOrElse(Long.MinValue)
-          val out = Seq.newBuilder[RuleCorpus.FiredTf]
-          fs.foreach { f =>
-            if (last == Long.MinValue || f.bucket_ts > last + cd) {
-              out += RuleCorpus.FiredTf(f.symbol, f.bucket_ts, f.rule, f.mart,
-                f.category, f.subcategory, f.direction, f.strength,
-                f.priority, f.timeframe)
-              last = f.bucket_ts
-            }
-          }
-          if (last != Long.MinValue) {
-            state.update(last)
-            state.setTimeoutTimestamp(math.max((last + 2 * cd) * 1000L,
-              state.getCurrentWatermarkMs() + 1000L))
-          }
-          out.result().iterator
-        }
-      }
-      .toDF()
-  }
 }

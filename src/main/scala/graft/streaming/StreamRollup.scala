@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.Tables
-import graft.operators.{Maintenance, Signals}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import graft.operators.Maintenance
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** Structured Streaming path (SURVEY.md §2.7): the reference's continuous
   * 1m→5m aggregate and batched upsert, re-expressed as streaming queries.
@@ -165,72 +164,4 @@ object StreamRollup {
       .withWatermark("event_time", horizon)
       .withColumn("digest", md5(col("text")))
       .dropDuplicatesWithinWatermark("digest")
-
-  /** §2.5 cooldown on a stream of fired signals: per-(symbol, rule) the
-    * last-EMITTED timestamp lives in the state store and survives across
-    * micro-batches (the reference keeps it in `signal_cooldowns`,
-    * pg_engine.py:612-636,655-665). Same greedy scan as the batch
-    * `g02_signal_cooldown`, with `flatMapGroupsWithState` carrying the
-    * state; per-key volume is one long — state size is #(symbol, rule),
-    * thousands of entries at reference scale.
-    */
-  /** [[Signals.Fired]] + the watermark column: the event-time attribute
-    * must flow INTO the stateful operator for event-time timeouts.
-    */
-  /* not `private`: the codegen'd row (de)serializer is a separate class
-   * and cannot access a JVM-private nested type */
-  private[graft] final case class FiredWm(symbol: String, bucket_ts: Long,
-    rule: String, direction: String, strength: Int,
-    event_time: java.sql.Timestamp)
-
-  def cooldownStream(fired: Dataset[Signals.Fired],
-      cooldownSec: Long): Dataset[Signals.Fired] = {
-    implicit val encOut: Encoder[Signals.Fired] = Encoders.product[Signals.Fired]
-    implicit val encWm: Encoder[FiredWm] = Encoders.product[FiredWm]
-    implicit val encKey: Encoder[(String, String)] =
-      Encoders.tuple(Encoders.STRING, Encoders.STRING)
-    implicit val encState: Encoder[Long] = Encoders.scalaLong
-    // the watermark paces state eviction with EVENT time: a processing-time
-    // timeout would make the query run continuous empty batches (and hang
-    // processAllAvailable in tests); event-time timeouts only fire when
-    // data advances the watermark, and the eviction bound is exact in the
-    // signal clock the cooldown itself uses
-    val withWm = fired
-      .withColumn("event_time", timestamp_seconds(col("bucket_ts")))
-      .withWatermark("event_time", "1 second")
-      .as[FiredWm]
-    withWm
-      .groupByKey(f => (f.symbol, f.rule))
-      .flatMapGroupsWithState[Long, Signals.Fired](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) { (_, it, state) =>
-        // state hygiene (pg_engine.py:655-665 `_cleanup_cooldowns`): once
-        // the watermark passes last-emit + 2× cooldown, any future event is
-        // past the suppression window anyway, so evicting the entry cannot
-        // change emissions — state size stays #ACTIVE (symbol, rule) pairs
-        // instead of ever-seen pairs.
-        if (state.hasTimedOut) { state.remove(); Iterator.empty }
-        else {
-          val fs = it.toArray.sortBy(_.bucket_ts)
-          var last = state.getOption.getOrElse(Long.MinValue)
-          val out = Seq.newBuilder[Signals.Fired]
-          fs.foreach { f =>
-            if (last == Long.MinValue || f.bucket_ts >= last + cooldownSec) {
-              out += Signals.Fired(f.symbol, f.bucket_ts, f.rule,
-                f.direction, f.strength)
-              last = f.bucket_ts
-            }
-          }
-          if (last != Long.MinValue) {
-            state.update(last)
-            // clamp above the current watermark: a key whose last emit is
-            // already deep in the past would otherwise request a timeout
-            // behind the watermark, which Spark rejects
-            state.setTimeoutTimestamp(math.max(
-              (last + 2 * cooldownSec) * 1000L,
-              state.getCurrentWatermarkMs() + 1000L))
-          }
-          out.result().iterator
-        }
-      }
-  }
 }

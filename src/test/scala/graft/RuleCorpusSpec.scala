@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.signals.{MartSeries, RuleCorpus}
+import graft.signals.{Cooldown, MartSeries, RuleCorpus}
 import graft.signals.RuleCorpus._
 
 /** Top-level row type for the streaming-parity MemoryStream (a nested
@@ -11,6 +11,12 @@ import graft.signals.RuleCorpus._
 final case class CRow(symbol: String, bucket_ts: Long, open: Double,
   high: Double, low: Double, close: Double, volume: Double,
   quote_volume: Double, trade_count: Long, taker_buy_volume: Double)
+
+/** A fired row with the full cooldown state key (symbol, rule, timeframe)
+  * and the mart tie-break — the columns [[Cooldown]] reads.
+  */
+final case class TfFired(symbol: String, bucket_ts: Long, rule: String,
+  mart: String, timeframe: String)
 
 /** Pins for the full signal-rule corpus (rules/__init__.py `ALL_RULES`
   * ported verbatim — see RuleCorpus.scala's fidelity model).
@@ -310,67 +316,6 @@ class RuleCorpusSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming per-rule cooldown == the batch greedy scan") {
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val firedRows = allFired.filter(col("mart") === "MACD柱状扫描器")
-      .as[RuleCorpus.Fired9].collect().sortBy(f => (f.bucket_ts, f.mart))
-    val half = firedRows.length / 2
-    val input = MemoryStream[RuleCorpus.Fired9](
-      implicitly[org.apache.spark.sql.Encoder[RuleCorpus.Fired9]], s)
-    val q = graft.streaming.RuleStream.corpusCooldownStream(input.toDF())
-      .writeStream.format("memory").queryName("mcs").outputMode("append").start()
-    try {
-      input.addData(firedRows.take(half).toSeq); q.processAllAvailable()
-      input.addData(firedRows.drop(half).toSeq); q.processAllAvailable()
-      val got = s.table("mcs").select("symbol", "bucket_ts", "rule")
-        .as[(String, Long, String)].collect().toSet
-      val cds = AllRules.map(r => r.name -> r.cooldown).toMap
-      val want = firedRows.groupBy(f => (f.symbol, f.rule)).toSeq.flatMap {
-        case ((_, rule), fs) =>
-          val cd = cds(rule)
-          var last = Long.MinValue
-          fs.sortBy(f => (f.bucket_ts, f.mart)).flatMap { f =>
-            if (last == Long.MinValue || f.bucket_ts > last + cd) {
-              last = f.bucket_ts; Some((f.symbol, f.bucket_ts, f.rule))
-            } else None
-          }
-      }.toSet
-      assert(got.nonEmpty && got === want)
-    } finally q.stop()
-  }
-
-  test("streaming tf-keyed cooldown == the batch cooldownScanTf scan") {
-    // the engine's full state key, streamed: an interleaved 1h/4h
-    // always-firing series split across micro-batches must reproduce the
-    // batch greedy emission with independent per-timeframe clocks
-    val s = spark
-    import s.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val rows = (1 to 3000).flatMap { i =>
-      Seq("1h", "4h").map(tf => RuleCorpus.FiredTf(
-        "A", i * 60L, "MACD金叉", "MACD柱状扫描器", "volume", "macd",
-        "BUY", 65, "medium", tf))
-    }.sortBy(_.bucket_ts)
-    val half = rows.length / 2
-    val input = MemoryStream[RuleCorpus.FiredTf](
-      implicitly[org.apache.spark.sql.Encoder[RuleCorpus.FiredTf]], s)
-    val q = graft.streaming.RuleStream.corpusCooldownStreamTf(input.toDF())
-      .writeStream.format("memory").queryName("tcs").outputMode("append").start()
-    try {
-      input.addData(rows.take(half)); q.processAllAvailable()
-      input.addData(rows.drop(half)); q.processAllAvailable()
-      val got = s.table("tcs").select("timeframe", "bucket_ts")
-        .as[(String, Long)].collect().toSet
-      val want = RuleCorpus.cooldownScanTf(rows.toDF())
-        .select("timeframe", "bucket_ts").as[(String, Long)].collect().toSet
-      assert(got.nonEmpty)
-      assert(got === want,
-        s"stream-only: ${(got -- want).take(3)}; batch-only: ${(want -- got).take(3)}")
-    } finally q.stop()
-  }
-
   test("cooldown scan streams at O(1) state: dense always-firing series") {
     // the r7 verdict's named heap exposure: a per-(symbol, rule) toArray
     // buffers millions of rows for an always-firing rule. The scan must
@@ -380,10 +325,10 @@ class RuleCorpusSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val n = 200000 // ~139 days of 1m bars, every bar fired
-    val rows = (1 to n).map(i => RuleCorpus.Fired10(
+    val rows = (1 to n).map(i => RuleCorpus.Fired9(
       "A", i * 60L, "MACD金叉", "MACD柱状扫描器", "volume", "macd",
-      "BUY", 65, "medium", "m"))
-    val out = RuleCorpus.cooldownScan(rows.toDF())
+      "BUY", 65, "medium"))
+    val out = Cooldown.scan(rows.toDF())
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("FlatMapGroups"),
       s"cooldown scan still buffers per group:\n${plan.take(800)}")
@@ -408,11 +353,9 @@ class RuleCorpusSpec extends AnyFunSuite {
     import s.implicits._
     val n = 5000
     val rows = (1 to n).flatMap { i =>
-      Seq("1h", "4h").map(tf => RuleCorpus.FiredTf(
-        "A", i * 60L, "MACD金叉", "MACD柱状扫描器", "volume", "macd",
-        "BUY", 65, "medium", tf))
+      Seq("1h", "4h").map(tf => TfFired("A", i * 60L, "MACD金叉", "MACD柱状扫描器", tf))
     }
-    val out = RuleCorpus.cooldownScanTf(rows.toDF())
+    val out = Cooldown.scan(rows.toDF())
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("FlatMapGroups"),
       s"tf cooldown scan still buffers per group:\n${plan.take(800)}")
@@ -439,8 +382,7 @@ class RuleCorpusSpec extends AnyFunSuite {
     assert(prio.nonEmpty)
     val tick = RuleCorpus.queries("f02_production_tick")(spark, TestSession.sf)
       .collect().map(_.toSeq).toSet
-    val full = RuleCorpus.cooldownScan(
-        RuleCorpus.corpusFiredShared(spark, TestSession.sf))
+    val full = Cooldown.scan(RuleCorpus.corpusFiredShared(spark, TestSession.sf))
       .filter(col("symbol").isin(prio.toSeq: _*))
       .collect().map(_.toSeq).toSet
     assert(tick.nonEmpty)
@@ -524,9 +466,9 @@ class RuleCorpusSpec extends AnyFunSuite {
     // g18/g19/g20 project from ONE checkpointed fired stream
     // (nativeFiredShared — the engine's evaluate-once-fan-out shape,
     // sqlite_engine.py:218-276). The projection must be row-identical to
-    // building the dispatch from scratch: any drift between firedMsg's
-    // when-structs and fired's means the shared stream is not the g18
-    // the oracle checks.
+    // building the dispatch from scratch: any drift between the
+    // message-carrying when-structs and the plain ones means the shared
+    // stream is not the g18 the oracle checks.
     val shared = RuleCorpus.queries("g18_rules_native_tf")(spark, TestSession.sf)
     assert(!shared.columns.contains("message"))
     val got = shared.collect().map(_.toSeq).toSet

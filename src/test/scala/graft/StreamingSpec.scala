@@ -1,5 +1,6 @@
 package graft
 
+import graft.signals.Cooldown
 import graft.streaming.StreamRollup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -13,6 +14,10 @@ case class C1m(symbol: String, bucket_ts: Long, open: Double, high: Double,
 case class Ev(event_id: Long, ts: Long, user_id: Long, value: Double)
 
 case class Doc(doc_id: Long, text: String, ingest_ts: Long)
+
+/** A fired signal of the pg-style rule set (g01's columns). */
+case class Fired(symbol: String, bucket_ts: Long, rule: String,
+  direction: String, strength: Int)
 
 /** §2.7 — the streaming 1m→5m roll-up must agree with the batch roll-up on
   * the same rows, and the foreachBatch upsert must reproduce the reference's
@@ -310,7 +315,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming cooldown carries last-emit state across micro-batches") {
     val s = spark
-    import graft.operators.Signals.Fired
     val enc = org.apache.spark.sql.Encoders.product[Fired]
     val input = MemoryStream[Fired](enc, s)
     // realistic epochs: ts=0 would sit ON the initial watermark boundary
@@ -318,7 +322,7 @@ class StreamingSpec extends AnyFunSuite {
     val b = 1700000000L
     def f(ts: Long) = Fired("S1", b + ts, "price_surge", "up", 2)
 
-    val q = StreamRollup.cooldownStream(input.toDS(), 600L)
+    val q = Cooldown.stream(input.toDF(), _ => 600L, strict = false)
       .writeStream.format("memory").queryName("cooled").outputMode("append").start()
     try {
       // batch 1: +0 emits, +300 inside cooldown
@@ -330,36 +334,6 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable()
       val got = s.table("cooled").collect().map(_.getAs[Long]("bucket_ts")).toSet
       assert(got == Set(b, b + 600L, b + 1200L), s"got $got")
-    } finally q.stop()
-  }
-
-  test("streaming cooldown over the replayed corpus equals batch g02") {
-    // the reference's production loop replayed: the corpus's fired signals
-    // arrive time-ordered across three micro-batches; the state store must
-    // make the stream emit EXACTLY the batch g02 rows (same greedy scan,
-    // state carried across batches instead of within one sort).
-    val s = spark
-    import graft.operators.Signals.Fired
-    implicit val enc: org.apache.spark.sql.Encoder[Fired] =
-      org.apache.spark.sql.Encoders.product[Fired]
-    val firedRows = SparkEntry.queries("g01_signal_rules")(s, TestSession.sf)
-      .as[Fired].collect().sortBy(_.bucket_ts)
-    assert(firedRows.nonEmpty)
-    val input = MemoryStream[Fired](enc, s)
-    val q = StreamRollup.cooldownStream(input.toDS(), 600L)
-      .writeStream.format("memory").queryName("cooled_corpus")
-      .outputMode("append").start()
-    try {
-      firedRows.grouped(firedRows.length / 3 + 1).foreach { b =>
-        input.addData(b.toSeq)
-        q.processAllAvailable()
-      }
-      val got = s.table("cooled_corpus").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-      val expect = SparkEntry.queries("g02_signal_cooldown")(s, TestSession.sf)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-      assert(got == expect,
-        s"stream minus batch: ${(got -- expect).take(5)}; batch minus stream: ${(expect -- got).take(5)}")
     } finally q.stop()
   }
 
